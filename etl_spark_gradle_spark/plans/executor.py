@@ -22,14 +22,17 @@ Deliberate divergences for scale (SURVEY §4 anti-patterns):
   ``distinct().count()`` — a shuffle of every column; here it is a
   groupBy over a 64-bit row hash, so the shuffle carries 8-byte keys
   regardless of row width).
-- ``shufflePartitions`` is applied for the run and restored afterwards
-  instead of leaking into later pipelines on a shared session.
+- ``shufflePartitions`` is applied for the run (batch and streaming) and
+  restored afterwards instead of leaking into later pipelines on a
+  shared session.
 """
 
 from __future__ import annotations
 
 import time
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +45,29 @@ from etl_spark_gradle_spark.plans.config import (
     RunContext,
     with_resolved_credentials,
 )
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, partitions: int | None) -> Iterator[None]:
+    """Run the block with ``spark.sql.shuffle.partitions`` set to
+    ``partitions`` (no change when None), then put the session's prior
+    value back. A session that never set the key gets it unset again:
+    ``conf.get(key, None)`` reads None there, while ``conf.get(key)``
+    would read Spark's built-in default."""
+    if not partitions:
+        yield
+        return
+    prev = spark.conf.get(SHUFFLE_PARTITIONS, None)
+    spark.conf.set(SHUFFLE_PARTITIONS, str(partitions))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(SHUFFLE_PARTITIONS)
+        else:
+            spark.conf.set(SHUFFLE_PARTITIONS, prev)
 
 
 def row_hash_duplicate_stats(df: DataFrame) -> dict[str, int]:
@@ -182,28 +208,50 @@ class PipelineExecutor:
         return self._run(config, spark, quality=False, collector=collector)
 
     def _run_streaming(self, config: PipelineConfig, spark: SparkSession) -> ExecutionMetrics:
-        """``streaming: true`` mode — one availableNow drain. Record
-        counts are not observable on a streaming plan without a second
-        listener round-trip, so counters report -0- and the sink's
-        checkpoint is the source of truth."""
-        import time as _time
+        """``streaming: true`` mode — one availableNow drain.
 
+        Shuffle partitions: ``performance.shufflePartitions`` when set,
+        else min(session value, ``defaultParallelism``). AQE does not
+        coalesce a micro-batch's shuffle, so the session's batch-sized
+        ceiling would cost one state-store task per partition per batch.
+        Spark pins the count in the checkpoint's offset log at first
+        start: this sizes new checkpoints only, old ones keep theirs.
+
+        Counts come from the finished query's progress, no extra job:
+        ``records_extracted`` sums the batches' ``numInputRows`` — the
+        rows the source produced, after any filter Spark pushed into the
+        scan (a leading ``filter`` on a JSON or Parquet file source), so
+        it can be below the rows landed. ``records_loaded`` is the
+        sink's ``numOutputRows``, or -1 when the sink reports none (a
+        file sink reports -1). Both read -1 when the drain ran enough
+        batches to fill the query's progress buffer
+        (``spark.sql.streaming.numRecentProgressUpdates``, default 100)."""
         from etl_spark_gradle_spark.streaming import run_streaming_pipeline
 
         ctx = RunContext.create(config.pipeline_id, spark)
-        start = _time.time()
-        metrics = ExecutionMetrics(
-            pipeline_id=config.pipeline_id,
-            run_id=ctx.run_id,
-            start_timestamp=start,
-        )
+        metrics = ExecutionMetrics(config.pipeline_id, ctx.run_id, start_timestamp=time.time())
         try:
-            run_streaming_pipeline(config, spark)
+            partitions = config.performance.shuffle_partitions or min(
+                int(spark.conf.get(SHUFFLE_PARTITIONS)), spark.sparkContext.defaultParallelism
+            )
+            with shuffle_partitions(spark, partitions):
+                query = run_streaming_pipeline(config, spark)
+            progress = query.recentProgress
+            # Spark keeps numRecentProgressUpdates - 1 entries, dropping
+            # the oldest: a full buffer may have lost batches
+            kept = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")) - 1
+            if len(progress) < kept:
+                metrics.records_extracted = sum(p.numInputRows for p in progress)
+                outputs = [p.sink.numOutputRows for p in progress]
+                metrics.records_loaded = sum(outputs) if min(outputs, default=0) >= 0 else -1
+            else:
+                metrics.records_extracted = metrics.records_loaded = -1
+            metrics.records_transformed = metrics.records_loaded
             metrics.status = "SUCCESS"
         except Exception as e:  # noqa: BLE001 — failure contract mirrors _run
             metrics.status = "FAILED"
             metrics.error_details = f"{type(e).__name__}: {e}"
-        metrics.end_timestamp = _time.time()
+        metrics.end_timestamp = time.time()
         return metrics
 
     def execute_with_quality(
@@ -232,155 +280,151 @@ class PipelineExecutor:
         collector.pipeline_id, collector.run_id = config.pipeline_id, ctx.run_id
         metrics = ExecutionMetrics(config.pipeline_id, ctx.run_id, start_timestamp=time.time())
         metrics.status = "RUNNING"
-        prev_shuffle: str | None = None
         cached: list[DataFrame] = []
         try:
-            if config.performance.shuffle_partitions:
-                prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions", None)
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(config.performance.shuffle_partitions)
-                )
-
-            extractor = self.extractors.get(config.source.type)
-            if extractor is None:
-                raise KeyError(
-                    f"no extractor registered for source type '{config.source.type}'"
-                )
-
-            # imported here, not at module top: quality.py itself imports
-            # plans.config, and a module-top import would make
-            # "import etl_spark_gradle_spark.quality" fail standalone
-            # (plans/__init__ -> executor -> partially-initialized quality)
-            from etl_spark_gradle_spark.quality import (
-                QualityReport,
-                split_valid_invalid,
-                validate_schema,
-            )
-
-            input_df: DataFrame | None = None
-            report: QualityReport | None = None
-            if quality:
-                with collector.phase("quality"):
-                    extracted = extractor.extract(
-                        with_resolved_credentials(config.source), ctx.spark
+            with shuffle_partitions(spark, config.performance.shuffle_partitions):
+                extractor = self.extractors.get(config.source.type)
+                if extractor is None:
+                    raise KeyError(
+                        f"no extractor registered for source type '{config.source.type}'"
                     )
-                    report = QualityReport()
 
-                    if config.quality.schema_validation and config.source.schema_path:
-                        import json as _json
+                # imported here, not at module top: quality.py itself imports
+                # plans.config, and a module-top import would make
+                # "import etl_spark_gradle_spark.quality" fail standalone
+                # (plans/__init__ -> executor -> partially-initialized quality)
+                from etl_spark_gradle_spark.quality import (
+                    QualityReport,
+                    split_valid_invalid,
+                    validate_schema,
+                )
 
-                        from pyspark.sql.types import StructType
+                input_df: DataFrame | None = None
+                report: QualityReport | None = None
+                if quality:
+                    with collector.phase("quality"):
+                        extracted = extractor.extract(
+                            with_resolved_credentials(config.source), ctx.spark
+                        )
+                        report = QualityReport()
 
-                        with open(config.source.schema_path, encoding="utf-8") as f:
-                            expected = StructType.fromJson(_json.load(f))
-                        result = validate_schema(extracted.schema, expected)
-                        if not result.is_valid:
-                            report.schema_errors = result.errors
-                            raise ValueError(
-                                "schema validation failed: " + "; ".join(result.errors)
+                        if config.quality.schema_validation and config.source.schema_path:
+                            import json as _json
+
+                            from pyspark.sql.types import StructType
+
+                            with open(config.source.schema_path, encoding="utf-8") as f:
+                                expected = StructType.fromJson(_json.load(f))
+                            result = validate_schema(extracted.schema, expected)
+                            if not result.is_valid:
+                                report.schema_errors = result.errors
+                                raise ValueError(
+                                    "schema validation failed: " + "; ".join(result.errors)
+                                )
+
+                        if config.quality.duplicate_check:
+                            dup = row_hash_duplicate_stats(extracted)
+                            report.duplicates = dup["duplicates"]
+                            metrics.records_extracted = dup["total"]
+
+                        # per-check violation counters ride the SAME plan the
+                        # split reads — the Observation resolves on the
+                        # quarantine write's action, zero extra jobs
+                        check_obs: Observation | None = None
+                        check_aggs = [
+                            F.sum(F.col(c).isNull().cast("long")).alias(f"null:{c}")
+                            for c in config.quality.null_checks
+                        ] + [
+                            F.sum(
+                                (~F.coalesce(F.expr(r), F.lit(False))).cast("long")
+                            ).alias(f"rule:{r}")
+                            for r in config.quality.custom_rules
+                        ]
+                        if check_aggs:
+                            check_obs = Observation(f"quality_{uuid.uuid4().hex[:8]}")
+                            extracted = extracted.observe(check_obs, *check_aggs)
+
+                        valid, invalid = split_valid_invalid(
+                            extracted,
+                            list(config.quality.null_checks),
+                            list(config.quality.custom_rules),
+                        )
+                        if config.quality.null_checks or config.quality.custom_rules:
+                            quarantine_path = (
+                                config.quality.quarantine_path
+                                or f"/tmp/quarantine/{config.pipeline_id}"
+                            )
+                            from etl_spark_gradle_spark.quality import (
+                                quarantine as quarantine_write,
                             )
 
-                    if config.quality.duplicate_check:
-                        dup = row_hash_duplicate_stats(extracted)
-                        report.duplicates = dup["duplicates"]
-                        metrics.records_extracted = dup["total"]
+                            quarantined = quarantine_write(
+                                invalid, quarantine_path, config.pipeline_id, ctx.run_id
+                            )
+                            metrics.records_failed = quarantined
+                            report.null_violations = quarantined
+                            report.quarantined = quarantined
+                            if check_obs is not None:
+                                report.violations_by_check = {
+                                    k: int(v or 0) for k, v in check_obs.get.items()
+                                }
+                        input_df = valid
 
-                    # per-check violation counters ride the SAME plan the
-                    # split reads — the Observation resolves on the
-                    # quarantine write's action, zero extra jobs
-                    check_obs: Observation | None = None
-                    check_aggs = [
-                        F.sum(F.col(c).isNull().cast("long")).alias(f"null:{c}")
-                        for c in config.quality.null_checks
-                    ] + [
-                        F.sum(
-                            (~F.coalesce(F.expr(r), F.lit(False))).cast("long")
-                        ).alias(f"rule:{r}")
-                        for r in config.quality.custom_rules
-                    ]
-                    if check_aggs:
-                        check_obs = Observation(f"quality_{uuid.uuid4().hex[:8]}")
-                        extracted = extracted.observe(check_obs, *check_aggs)
-
-                    valid, invalid = split_valid_invalid(
-                        extracted,
-                        list(config.quality.null_checks),
-                        list(config.quality.custom_rules),
+                with collector.phase("plan"):
+                    extracted_df, transformed, steps, extract_obs, cached = self.build_plan(
+                        config, ctx, input_df=input_df
                     )
-                    if config.quality.null_checks or config.quality.custom_rules:
-                        quarantine_path = (
-                            config.quality.quarantine_path
-                            or f"/tmp/quarantine/{config.pipeline_id}"
-                        )
-                        from etl_spark_gradle_spark.quality import quarantine as quarantine_write
 
-                        quarantined = quarantine_write(
-                            invalid, quarantine_path, config.pipeline_id, ctx.run_id
-                        )
-                        metrics.records_failed = quarantined
-                        report.null_violations = quarantined
-                        report.quarantined = quarantined
-                        if check_obs is not None:
-                            report.violations_by_check = {
-                                k: int(v or 0) for k, v in check_obs.get.items()
-                            }
-                    input_df = valid
-
-            with collector.phase("plan"):
-                extracted_df, transformed, steps, extract_obs, cached = self.build_plan(
-                    config, ctx, input_df=input_df
+                meta = lineage_mod.build_lineage(
+                    config.source.type, extractor.source_identifier(config.source), steps
+                )
+                final = lineage_mod.stamp_lineage(
+                    transformed, meta, config.pipeline_id, ctx.run_id
                 )
 
-            meta = lineage_mod.build_lineage(
-                config.source.type, extractor.source_identifier(config.source), steps
-            )
-            final = lineage_mod.stamp_lineage(
-                transformed, meta, config.pipeline_id, ctx.run_id
-            )
-
-            loader = self.loaders.get(config.sink.type)
-            if loader is None:
-                raise KeyError(f"no loader registered for sink type '{config.sink.type}'")
-            with collector.phase("load"):
-                result = loader.load(
-                    final, with_resolved_credentials(config.sink), ctx.run_id
-                )
-
-            metrics.records_loaded = result.records_written
-            metrics.records_transformed = result.records_written
-            # the observation rode the sink action — no extra job ran.
-            # In the quality path it observes the valid branch, so the
-            # quarantined rows are added back to get the extracted total.
-            # Observation.get raises a JVM assertion when the observed
-            # node's metrics never materialized — AQE can eliminate the
-            # observed subtree entirely (seen: an EMPTY keyword-match
-            # relation empty-propagated through a LEFT ANTI join whose
-            # other side re-reads the source, leaving no executed task
-            # containing the observe node). The pipeline's OUTPUT is
-            # correct in that case; failing the run over a lost counter
-            # would be wrong, so degrade to the documented -1 sentinel
-            # (same contract as performance.skipExtractCount).
-            if extract_obs is not None:
-                try:
-                    metrics.records_extracted = (
-                        int(extract_obs.get["records_extracted"])
-                        + metrics.records_failed
+                loader = self.loaders.get(config.sink.type)
+                if loader is None:
+                    raise KeyError(f"no loader registered for sink type '{config.sink.type}'")
+                with collector.phase("load"):
+                    result = loader.load(
+                        final, with_resolved_credentials(config.sink), ctx.run_id
                     )
-                except Exception:  # noqa: BLE001 — lost-observation fallback
+
+                metrics.records_loaded = result.records_written
+                metrics.records_transformed = result.records_written
+                # the observation rode the sink action — no extra job ran.
+                # In the quality path it observes the valid branch, so the
+                # quarantined rows are added back to get the extracted total.
+                # Observation.get raises a JVM assertion when the observed
+                # node's metrics never materialized — AQE can eliminate the
+                # observed subtree entirely (seen: an EMPTY keyword-match
+                # relation empty-propagated through a LEFT ANTI join whose
+                # other side re-reads the source, leaving no executed task
+                # containing the observe node). The pipeline's OUTPUT is
+                # correct in that case; failing the run over a lost counter
+                # would be wrong, so degrade to the documented -1 sentinel
+                # (same contract as performance.skipExtractCount).
+                if extract_obs is not None:
+                    try:
+                        metrics.records_extracted = (
+                            int(extract_obs.get["records_extracted"])
+                            + metrics.records_failed
+                        )
+                    except Exception:  # noqa: BLE001 — lost-observation fallback
+                        metrics.records_extracted = -1
+                else:
                     metrics.records_extracted = -1
-            else:
-                metrics.records_extracted = -1
-            metrics.quality_report = report
-            collector.record("extract", metrics.records_extracted)
-            collector.record("load", metrics.records_loaded)
-            # incremental sources (file_incremental) stage their batch
-            # at extract time and only mark it processed HERE, after
-            # the sink action succeeded — a failed run re-discovers the
-            # same files next time (at-least-once)
-            commit = getattr(extractor, "commit_processed", None)
-            if commit is not None:
-                commit(config.source)
-            metrics.status = "SUCCESS"
+                metrics.quality_report = report
+                collector.record("extract", metrics.records_extracted)
+                collector.record("load", metrics.records_loaded)
+                # incremental sources (file_incremental) stage their batch
+                # at extract time and only mark it processed HERE, after
+                # the sink action succeeded — a failed run re-discovers the
+                # same files next time (at-least-once)
+                commit = getattr(extractor, "commit_processed", None)
+                if commit is not None:
+                    commit(config.source)
+                metrics.status = "SUCCESS"
         except Exception as e:  # noqa: BLE001 — failure contract returns metrics
             metrics.status = "FAILED"
             metrics.error_details = f"{type(e).__name__}: {e}"
@@ -390,7 +434,5 @@ class PipelineExecutor:
                     frame.unpersist()
                 except Exception:  # noqa: BLE001 — best-effort cleanup
                     pass
-            if prev_shuffle is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
             metrics.end_timestamp = time.time()
         return metrics

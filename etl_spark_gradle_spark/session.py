@@ -18,6 +18,9 @@ from pyspark.sql import SparkSession
 #   hand-tuned shuffle sizing; mandatory at scale where static stats lie.
 # - shuffle.partitions: a high static ceiling; AQE coalesces down. On a
 #   real cluster this should be ~2-3x total cores; local tests override.
+#   Batch only: AQE does not re-plan streaming micro-batches, so the
+#   executor runs a streaming drain at min(this, defaultParallelism)
+#   unless the pipeline sets performance.shufflePartitions.
 # - autoBroadcastJoinThreshold: dimension tables (region/nation/customer
 #   at small SF) broadcast instead of shuffling the fact table.
 # - Arrow: every pandas_udf / mapInPandas transfer is Arrow-batched.

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from etl_spark_gradle_spark.operators.relational import _agg_column
@@ -554,7 +555,7 @@ def run_file_to_file_stream(
     write_stream(out, sink, output_mode="append", await_termination=True)
 
 
-def run_streaming_pipeline(config, spark: SparkSession) -> None:
+def run_streaming_pipeline(config, spark: SparkSession) -> StreamingQuery:
     """Run a ``streaming: true`` pipeline YAML as real Structured
     Streaming: ``readStream`` source → stateless transforms (filter/map
     via the same registry operators) + streaming-aware stateful steps
@@ -566,6 +567,10 @@ def run_streaming_pipeline(config, spark: SparkSession) -> None:
     StructType JSON via source ``schemaPath``, or it is inferred from a
     one-off batch read of the same path (fine for file sources whose
     layout is stable; pin schemaPath in production).
+
+    Returns the ``StreamingQuery``; with the default availableNow trigger
+    it has terminated, and its ``recentProgress`` holds the drain's
+    batches.
     """
     from etl_spark_gradle_spark.operators.relational import (
         filter_rows,
@@ -650,7 +655,7 @@ def run_streaming_pipeline(config, spark: SparkSession) -> None:
             )
 
     sink = dict(config.sink.options)
-    write_stream(df, sink, output_mode="append", await_termination=True)
+    return write_stream(df, sink, output_mode="append", await_termination=True)
 
 
 def stream_dedup_against_store(
