@@ -8,11 +8,14 @@ Parity anchors:
 
 Divergence note: the reference times three separate actions because it
 executes the plan three times (SURVEY §4 anti-pattern). This engine has
-ONE action (the sink write), so phase timings mean: ``plan`` = driver
-time composing the lazy plan, ``quality`` = the quality pre-pass jobs
-(duplicate hash-agg, quarantine write) when enabled, ``load`` = the
-single sink action that executes the whole plan. Counts still come from
-``Observation``s riding that one action.
+ONE action per output (the sink write), so phase timings mean: ``plan``
+= driver time composing the lazy plan, ``load`` = the sink action that
+executes the whole plan, ``quality`` (when enabled) = wall time from
+extracting and submitting the quality gate's side actions (duplicate
+hash-agg, quarantine write) to joining them. Those actions run alongside
+the sink write, so ``quality`` contains ``plan`` and ``load``: phases
+overlap, and their sum can exceed the run. Counts still come from
+``Observation``s riding the actions.
 """
 
 from __future__ import annotations

@@ -22,6 +22,15 @@ Deliberate divergences for scale (SURVEY §4 anti-patterns):
   ``distinct().count()`` — a shuffle of every column; here it is a
   groupBy over a 64-bit row hash, so the shuffle carries 8-byte keys
   regardless of row width).
+- The reference runs the quality gate's three actions one after
+  another: duplicate check, quarantine write, sink write. Here the
+  first two run on a 2-thread pool alongside the sink write, under the
+  caller's job group; every action is joined before ``execute``
+  returns, and the incremental source commits only after all three
+  succeeded. The outputs were never atomic with each other, and now a
+  FAILED quality run may have written either of them (the quarantine
+  is appended; ``file_incremental`` stays at-least-once). The run
+  reports the error the reference's order would have raised first.
 - ``shufflePartitions`` is applied for the run (batch and streaming) and
   restored afterwards instead of leaking into later pipelines on a
   shared session.
@@ -32,7 +41,7 @@ from __future__ import annotations
 import time
 import uuid
 from collections.abc import Iterator
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -71,7 +80,8 @@ def shuffle_partitions(spark: SparkSession, partitions: int | None) -> Iterator[
 
 
 def row_hash_duplicate_stats(df: DataFrame) -> dict[str, int]:
-    """Full-row duplicate metrics via a 64-bit row-hash aggregation.
+    """Full-row duplicate metrics: ``operators.dedup.duplicate_stats``
+    over one 64-bit row hash, collected.
 
     Semantics match the reference's ``distinct().count()`` detection
     (``quality/DataQualityChecker.scala:87-96``) up to hash collisions
@@ -80,18 +90,12 @@ def row_hash_duplicate_stats(df: DataFrame) -> dict[str, int]:
     the shuffle carries only the hash instead of every column — the
     difference between checking 100 TB and re-shuffling it.
     """
+    from etl_spark_gradle_spark.operators.dedup import duplicate_stats
+
     hashed = df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h"))
-    row = (
-        hashed.groupBy("__h")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.sum("n").cast("long").alias("total"),
-            F.count(F.lit(1)).cast("long").alias("distinct"),
-        )
-        .collect()[0]
-    )
+    row = duplicate_stats(hashed, ["__h"]).collect()[0]
     total = int(row["total"] or 0)
-    distinct = int(row["distinct"] or 0)
+    distinct = int(row["distinct_keys"] or 0)
     return {"total": total, "distinct": distinct, "duplicates": total - distinct}
 
 
@@ -262,10 +266,11 @@ class PipelineExecutor:
     ) -> ExecutionMetrics:
         """Quality-gated run (parity:
         ``pipeline/PipelineExecutor.scala:90-165``): extract -> schema
-        validation -> duplicate check -> null-check split -> quarantine
-        invalid -> transform valid -> load. The valid branch goes through
-        ``build_plan`` so performance knobs behave identically to the
-        plain path."""
+        validation -> null-check split -> transform valid -> load, with
+        the duplicate check and the quarantine write of the invalid rows
+        running alongside the load (``quality.quality_gate``). The valid
+        branch goes through ``build_plan`` so performance knobs behave
+        identically to the plain path."""
         return self._run(config, spark, quality=True, collector=collector)
 
     def _run(
@@ -289,106 +294,56 @@ class PipelineExecutor:
                         f"no extractor registered for source type '{config.source.type}'"
                     )
 
-                # imported here, not at module top: quality.py itself imports
-                # plans.config, and a module-top import would make
-                # "import etl_spark_gradle_spark.quality" fail standalone
-                # (plans/__init__ -> executor -> partially-initialized quality)
-                from etl_spark_gradle_spark.quality import (
-                    QualityReport,
-                    split_valid_invalid,
-                    validate_schema,
-                )
+                # the quality phase spans the gate's side actions, from
+                # submission to join, so it overlaps plan and load
+                with collector.phase("quality") if quality else nullcontext():
+                    input_df, pending, report = None, None, None
+                    if quality:
+                        # imported here, not at module top: quality.py imports
+                        # plans.config, and a module-top import would make
+                        # "import etl_spark_gradle_spark.quality" fail standalone
+                        # (plans/__init__ -> executor -> partially-initialized quality)
+                        from etl_spark_gradle_spark.quality import quality_gate
 
-                input_df: DataFrame | None = None
-                report: QualityReport | None = None
-                if quality:
-                    with collector.phase("quality"):
                         extracted = extractor.extract(
                             with_resolved_credentials(config.source), ctx.spark
                         )
-                        report = QualityReport()
-
-                        if config.quality.schema_validation and config.source.schema_path:
-                            import json as _json
-
-                            from pyspark.sql.types import StructType
-
-                            with open(config.source.schema_path, encoding="utf-8") as f:
-                                expected = StructType.fromJson(_json.load(f))
-                            result = validate_schema(extracted.schema, expected)
-                            if not result.is_valid:
-                                report.schema_errors = result.errors
-                                raise ValueError(
-                                    "schema validation failed: " + "; ".join(result.errors)
-                                )
-
-                        if config.quality.duplicate_check:
-                            dup = row_hash_duplicate_stats(extracted)
-                            report.duplicates = dup["duplicates"]
-                            metrics.records_extracted = dup["total"]
-
-                        # per-check violation counters ride the SAME plan the
-                        # split reads — the Observation resolves on the
-                        # quarantine write's action, zero extra jobs
-                        check_obs: Observation | None = None
-                        check_aggs = [
-                            F.sum(F.col(c).isNull().cast("long")).alias(f"null:{c}")
-                            for c in config.quality.null_checks
-                        ] + [
-                            F.sum(
-                                (~F.coalesce(F.expr(r), F.lit(False))).cast("long")
-                            ).alias(f"rule:{r}")
-                            for r in config.quality.custom_rules
-                        ]
-                        if check_aggs:
-                            check_obs = Observation(f"quality_{uuid.uuid4().hex[:8]}")
-                            extracted = extracted.observe(check_obs, *check_aggs)
-
-                        valid, invalid = split_valid_invalid(
+                        input_df, pending = quality_gate(
                             extracted,
-                            list(config.quality.null_checks),
-                            list(config.quality.custom_rules),
+                            config.quality,
+                            config.pipeline_id,
+                            ctx.run_id,
+                            schema_path=config.source.schema_path,
                         )
-                        if config.quality.null_checks or config.quality.custom_rules:
-                            quarantine_path = (
-                                config.quality.quarantine_path
-                                or f"/tmp/quarantine/{config.pipeline_id}"
-                            )
-                            from etl_spark_gradle_spark.quality import (
-                                quarantine as quarantine_write,
+                    try:
+                        with collector.phase("plan"):
+                            extracted_df, transformed, steps, extract_obs, cached = (
+                                self.build_plan(config, ctx, input_df=input_df)
                             )
 
-                            quarantined = quarantine_write(
-                                invalid, quarantine_path, config.pipeline_id, ctx.run_id
+                        meta = lineage_mod.build_lineage(
+                            config.source.type, extractor.source_identifier(config.source), steps
+                        )
+                        final = lineage_mod.stamp_lineage(
+                            transformed, meta, config.pipeline_id, ctx.run_id
+                        )
+
+                        loader = self.loaders.get(config.sink.type)
+                        if loader is None:
+                            raise KeyError(
+                                f"no loader registered for sink type '{config.sink.type}'"
                             )
-                            metrics.records_failed = quarantined
-                            report.null_violations = quarantined
-                            report.quarantined = quarantined
-                            if check_obs is not None:
-                                report.violations_by_check = {
-                                    k: int(v or 0) for k, v in check_obs.get.items()
-                                }
-                        input_df = valid
-
-                with collector.phase("plan"):
-                    extracted_df, transformed, steps, extract_obs, cached = self.build_plan(
-                        config, ctx, input_df=input_df
-                    )
-
-                meta = lineage_mod.build_lineage(
-                    config.source.type, extractor.source_identifier(config.source), steps
-                )
-                final = lineage_mod.stamp_lineage(
-                    transformed, meta, config.pipeline_id, ctx.run_id
-                )
-
-                loader = self.loaders.get(config.sink.type)
-                if loader is None:
-                    raise KeyError(f"no loader registered for sink type '{config.sink.type}'")
-                with collector.phase("load"):
-                    result = loader.load(
-                        final, with_resolved_credentials(config.sink), ctx.run_id
-                    )
+                        with collector.phase("load"):
+                            result = loader.load(
+                                final, with_resolved_credentials(config.sink), ctx.run_id
+                            )
+                    finally:
+                        # join the side actions on every path, so no thread
+                        # outlives the run; an error of theirs replaces one
+                        # raised above, as the reference's order would have it
+                        if pending:
+                            report = pending()
+                            metrics.records_failed = report.quarantined
 
                 metrics.records_loaded = result.records_written
                 metrics.records_transformed = result.records_written

@@ -11,20 +11,27 @@ Parity anchors:
 Scale notes vs the reference: null metrics there run one
 ``filter(isNull).count()`` job per column; here it is a single-pass
 aggregate (one job regardless of column count). Duplicate detection via
-``distinct().count()`` is a full shuffle of every column — kept for
-parity in ``duplicate_metrics`` but the dedup operators in
-``operators/dedup.py`` are the scalable alternatives.
+``distinct().count()`` is a full shuffle of every column; here it is one
+counter, ``operators.dedup.duplicate_stats``, over a 64-bit row hash
+(``plans.executor.row_hash_duplicate_stats``), so the shuffle carries
+8-byte keys. ``quality_gate`` runs the duplicate check and the
+quarantine write alongside the caller's sink write instead of before it.
 """
 
 from __future__ import annotations
 
+import json
+import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
-from etl_spark_gradle_spark.plans.config import ValidationResult
+from etl_spark_gradle_spark.plans.config import QualityConfig, ValidationResult
 
 
 def null_check_condition(columns: list[str]):
@@ -221,14 +228,6 @@ class ProfileTransformer:
         return f"profile({opts})"
 
 
-def duplicate_metrics(df: DataFrame) -> dict[str, int]:
-    """Full-row duplicate count (parity:
-    ``quality/DataQualityChecker.scala:87-96``)."""
-    total = df.count()
-    distinct = df.distinct().count()
-    return {"total": total, "distinct": distinct, "duplicates": total - distinct}
-
-
 def _types_compatible(actual: DataType, expected: DataType) -> bool:
     """Recursive type match for struct/array/map (parity:
     ``quality/SchemaValidator.scala:78-97``)."""
@@ -329,8 +328,6 @@ def quarantine(
     """Stamp quarantine metadata and append as Parquet (parity:
     ``quality/QuarantineWriter.scala:26-43``). Returns rows quarantined
     (observed on the write action — no second job)."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     stamped = (
         df.withColumn("quarantine_timestamp", F.current_timestamp())
@@ -366,6 +363,85 @@ class QualityReport:
     # per-check violation counts keyed "null:<col>" / "rule:<expr>" —
     # observed on the same action as the quarantine write, zero extra jobs
     violations_by_check: dict[str, int] = field(default_factory=dict)
+
+
+def quality_gate(
+    extracted: DataFrame,
+    config: QualityConfig,
+    pipeline_id: str,
+    run_id: str,
+    schema_path: str | None = None,
+) -> tuple[DataFrame, Callable[[], QualityReport]]:
+    """The quality gate of a quality-gated run (parity:
+    ``pipeline/PipelineExecutor.scala:90-165``): schema validation,
+    duplicate check, null-check and custom-rule split, quarantine.
+
+    Returns ``(valid, pending)``. Schema validation (against the
+    StructType JSON at ``schema_path``) runs here and raises before any
+    job. The duplicate check (report-only: nothing reads it before the
+    load) and the quarantine write are submitted to a 2-worker pool, so
+    they run while the caller writes ``valid``. Each runs under the job
+    group, job description and session tags the calling thread has now.
+
+    ``pending()`` joins both, raises the first error in the reference's
+    order (duplicate check, then quarantine write) and returns the filled
+    report. Call it on every path, failures included: it is what joins
+    the threads.
+    """
+    report = QualityReport()
+    if config.schema_validation and schema_path:
+        with open(schema_path, encoding="utf-8") as f:
+            expected = StructType.fromJson(json.load(f))
+        result = validate_schema(extracted.schema, expected)
+        if not result.is_valid:
+            raise ValueError("schema validation failed: " + "; ".join(result.errors))
+
+    # looked up when the action runs, not at import: the benchmark's
+    # tracer patches both module attributes
+    from etl_spark_gradle_spark.plans import executor
+
+    actions: dict[str, Callable] = {}
+    if config.duplicate_check:
+        actions["duplicates"] = lambda: executor.row_hash_duplicate_stats(extracted)
+
+    valid = extracted
+    null_checks, rules = list(config.null_checks), list(config.custom_rules)
+    check_obs: Observation | None = None
+    if null_checks or rules:
+        # per-check violation counters ride the quarantine write, zero
+        # extra jobs; only that plan carries them, so the concurrent sink
+        # write cannot resolve the Observation first
+        check_obs = Observation(f"quality_{uuid.uuid4().hex[:8]}")
+        observed = extracted.observe(
+            check_obs,
+            *[F.sum(F.col(c).isNull().cast("long")).alias(f"null:{c}") for c in null_checks],
+            *[
+                F.sum((~F.coalesce(F.expr(r), F.lit(False))).cast("long")).alias(f"rule:{r}")
+                for r in rules
+            ],
+        )
+        valid, _ = split_valid_invalid(extracted, null_checks, rules)
+        _, invalid = split_valid_invalid(observed, null_checks, rules)
+        path = config.quarantine_path or f"/tmp/quarantine/{pipeline_id}"
+        actions["quarantined"] = lambda: quarantine(invalid, path, pipeline_id, run_id)
+
+    spark = extracted.sparkSession
+    pool = ThreadPoolExecutor(max_workers=2, thread_name_prefix="quality-gate")
+    futures = {
+        name: pool.submit(inheritable_thread_target(spark)(action))
+        for name, action in actions.items()
+    }
+
+    def pending() -> QualityReport:
+        pool.shutdown(wait=True)
+        if "duplicates" in futures:
+            report.duplicates = futures["duplicates"].result()["duplicates"]
+        if "quarantined" in futures:
+            report.quarantined = report.null_violations = futures["quarantined"].result()
+            report.violations_by_check = {k: int(v or 0) for k, v in check_obs.get.items()}
+        return report
+
+    return valid, pending
 
 
 class SchemaAlignTransformer:
