@@ -34,6 +34,12 @@ Deliberate divergences for scale (SURVEY §4 anti-patterns):
 - ``shufflePartitions`` is applied for the run (batch and streaming) and
   restored afterwards instead of leaking into later pipelines on a
   shared session.
+- A streaming drain whose checkpoint is on the local filesystem writes
+  it through Spark's ``FileSystemBasedCheckpointFileManager`` instead
+  of the default ``FileContext`` one, for that drain only: without
+  native Hadoop libraries every ``FileContext`` rename forks
+  ``readlink`` four times. Checksums and ``.crc`` sidecars stay; other
+  filesystems keep Spark's default.
 """
 
 from __future__ import annotations
@@ -59,24 +65,24 @@ SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 @contextmanager
-def shuffle_partitions(spark: SparkSession, partitions: int | None) -> Iterator[None]:
-    """Run the block with ``spark.sql.shuffle.partitions`` set to
-    ``partitions`` (no change when None), then put the session's prior
-    value back. A session that never set the key gets it unset again:
-    ``conf.get(key, None)`` reads None there, while ``conf.get(key)``
-    would read Spark's built-in default."""
-    if not partitions:
-        yield
-        return
-    prev = spark.conf.get(SHUFFLE_PARTITIONS, None)
-    spark.conf.set(SHUFFLE_PARTITIONS, str(partitions))
+def session_conf(spark: SparkSession, settings: dict[str, object]) -> Iterator[None]:
+    """Run the block with each session conf key in ``settings`` set to its
+    value (a key with no value, None or 0, is left alone), then put the
+    session's prior values back. A key the session never set gets unset
+    again: ``conf.get(key, None)`` reads None there, while
+    ``conf.get(key)`` would read Spark's built-in default."""
+    settings = {key: str(value) for key, value in settings.items() if value}
+    prior = {key: spark.conf.get(key, None) for key in settings}
+    for key, value in settings.items():
+        spark.conf.set(key, value)
     try:
         yield
     finally:
-        if prev is None:
-            spark.conf.unset(SHUFFLE_PARTITIONS)
-        else:
-            spark.conf.set(SHUFFLE_PARTITIONS, prev)
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def row_hash_duplicate_stats(df: DataFrame) -> dict[str, int]:
@@ -229,8 +235,13 @@ class PipelineExecutor:
         sink's ``numOutputRows``, or -1 when the sink reports none (a
         file sink reports -1). Both read -1 when the drain ran enough
         batches to fill the query's progress buffer
-        (``spark.sql.streaming.numRecentProgressUpdates``, default 100)."""
-        from etl_spark_gradle_spark.streaming import run_streaming_pipeline
+        (``spark.sql.streaming.numRecentProgressUpdates``, default 100).
+
+        A drain whose checkpoint and file-sink metadata live on the local
+        filesystem writes them through Spark's
+        ``FileSystemBasedCheckpointFileManager``
+        (``streaming.local_checkpoint``), scoped like the partitions."""
+        from etl_spark_gradle_spark import streaming
 
         ctx = RunContext.create(config.pipeline_id, spark)
         metrics = ExecutionMetrics(config.pipeline_id, ctx.run_id, start_timestamp=time.time())
@@ -238,8 +249,11 @@ class PipelineExecutor:
             partitions = config.performance.shuffle_partitions or min(
                 int(spark.conf.get(SHUFFLE_PARTITIONS)), spark.sparkContext.defaultParallelism
             )
-            with shuffle_partitions(spark, partitions):
-                query = run_streaming_pipeline(config, spark)
+            settings = {SHUFFLE_PARTITIONS: partitions}
+            if streaming.local_checkpoint(spark, config.sink.options):
+                settings[streaming.CHECKPOINT_FILE_MANAGER] = streaming.FILE_SYSTEM_CHECKPOINTS
+            with session_conf(spark, settings):
+                query = streaming.run_streaming_pipeline(config, spark)
             progress = query.recentProgress
             # Spark keeps numRecentProgressUpdates - 1 entries, dropping
             # the oldest: a full buffer may have lost batches
@@ -287,7 +301,7 @@ class PipelineExecutor:
         metrics.status = "RUNNING"
         cached: list[DataFrame] = []
         try:
-            with shuffle_partitions(spark, config.performance.shuffle_partitions):
+            with session_conf(spark, {SHUFFLE_PARTITIONS: config.performance.shuffle_partitions}):
                 extractor = self.extractors.get(config.source.type)
                 if extractor is None:
                     raise KeyError(

@@ -29,6 +29,8 @@ sink with checkpointing.
 
 from __future__ import annotations
 
+from urllib.parse import urlsplit
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -466,6 +468,39 @@ def _apply_trigger(writer, trigger: str):
     )
 
 
+FILE_FORMATS = ("parquet", "json", "csv", "orc")
+CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_SYSTEM_CHECKPOINTS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def local_checkpoint(spark: SparkSession, options: dict[str, str]) -> bool:
+    """True when every checkpoint file a ``write_stream`` with these sink
+    options writes is on the local filesystem: the ``checkpointLocation``
+    (else the session's ``spark.sql.streaming.checkpointLocation``, else
+    Spark's local temp dir) and, for file formats, the ``_spark_metadata``
+    log under ``path``. Decided from the URI scheme alone — a scheme-less
+    path takes ``fs.defaultFS``'s — so no FileSystem is instantiated;
+    only ``file`` counts as local."""
+    locations = [
+        options.get("checkpointLocation")
+        or spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    ]
+    if options.get("format", "parquet").lower() in FILE_FORMATS:
+        locations.append(options.get("path"))
+    for location in filter(None, locations):
+        scheme = urlsplit(location).scheme
+        if not scheme:
+            default_fs = spark.conf.get("fs.defaultFS", None) or (
+                spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+            )
+            scheme = urlsplit(default_fs).scheme
+        if scheme != "file":
+            return False
+    return True
+
+
 def write_stream(
     df: DataFrame,
     options: dict[str, str],
@@ -497,7 +532,7 @@ def write_stream(
             "kafka.bootstrap.servers",
             options.get("bootstrap.servers") or options["kafka.bootstrap.servers"],
         ).option("topic", options["topic"])
-    if fmt in ("parquet", "json", "csv", "orc"):
+    if fmt in FILE_FORMATS:
         if not options.get("path") or not options.get("checkpointLocation"):
             raise ConfigError("file stream sink requires 'path' and 'checkpointLocation'")
         writer = writer.option("path", options["path"])
