@@ -40,6 +40,15 @@ Deliberate divergences for scale (SURVEY §4 anti-patterns):
   native Hadoop libraries every ``FileContext`` rename forks
   ``readlink`` four times. Checksums and ``.crc`` sidecars stay; other
   filesystems keep Spark's default.
+- An ``availableNow`` drain runs with
+  ``spark.sql.streaming.stateStore.unloadOnCommit``: each state-store
+  task snapshots and cleans its store, then closes it, when it commits.
+  Spark otherwise keeps every query run's stores loaded, each with four
+  checksum-writer threads, until background maintenance unloads them
+  60 s after the first load. A drain's run has ended by then, so a
+  process that drained in a loop kept every drain's stores and
+  threads, and with no snapshot written every drain replayed every
+  delta since the checkpoint began.
 """
 
 from __future__ import annotations
@@ -240,7 +249,10 @@ class PipelineExecutor:
         A drain whose checkpoint and file-sink metadata live on the local
         filesystem writes them through Spark's
         ``FileSystemBasedCheckpointFileManager``
-        (``streaming.local_checkpoint``), scoped like the partitions."""
+        (``streaming.local_checkpoint``), scoped like the partitions. An
+        ``availableNow`` drain (``streaming.is_drain``) also unloads its
+        state stores on commit, after a synchronous maintenance pass, so
+        none outlives the drain."""
         from etl_spark_gradle_spark import streaming
 
         ctx = RunContext.create(config.pipeline_id, spark)
@@ -252,6 +264,8 @@ class PipelineExecutor:
             settings = {SHUFFLE_PARTITIONS: partitions}
             if streaming.local_checkpoint(spark, config.sink.options):
                 settings[streaming.CHECKPOINT_FILE_MANAGER] = streaming.FILE_SYSTEM_CHECKPOINTS
+            if streaming.is_drain(config.sink.options):
+                settings[streaming.UNLOAD_ON_COMMIT] = "true"
             with session_conf(spark, settings):
                 query = streaming.run_streaming_pipeline(config, spark)
             progress = query.recentProgress

@@ -66,6 +66,19 @@ _DEFAULTS: dict[str, str] = {
     # fraction of detected RAM on small-cgroup hosts (an unconditional
     # 8g heap on a 4 GiB container gets the JVM OOM-killed).
     "spark.driver.memory": "8g",
+    # JIT (local JVM; spark.driver.extraJavaOptions is appended after
+    # these, so a caller's options still win). C2 compiles a method once
+    # it has run Tier4*Threshold times; these are 4x HotSpot's defaults.
+    # A CLI run lives 15-30 s on a few cores. At the defaults, C2 spent
+    # 1-3 CPU-s per streaming drain (JMX CompilationMXBean, 4 vCPUs),
+    # through a whole 40-drain process, on lukewarm planning and
+    # checkpoint code, on the cores the drain's tasks need; drain times
+    # kept falling from ~1.6 s to ~1.0 s. Hot row loops still reach C2:
+    # the 100K-row quality-gated benchmark run did not slow down.
+    "spark.driver.defaultJavaOptions": (
+        "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400"
+        " -XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000"
+    ),
 }
 
 

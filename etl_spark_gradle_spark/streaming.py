@@ -473,6 +473,13 @@ CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 FILE_SYSTEM_CHECKPOINTS = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 )
+UNLOAD_ON_COMMIT = "spark.sql.streaming.stateStore.unloadOnCommit"
+
+
+def is_drain(options: dict[str, str]) -> bool:
+    """True when a ``write_stream`` with these sink options runs a
+    bounded ``availableNow`` drain (the default trigger)."""
+    return options.get("trigger", "availableNow") == "availableNow"
 
 
 def local_checkpoint(spark: SparkSession, options: dict[str, str]) -> bool:

@@ -9,7 +9,10 @@ Contracts:
   as it found it, whether the run succeeds or fails;
 - the choice is made from URI schemes alone, without a FileSystem;
 - checkpoints written by either manager drain on under the other, keep
-  their checksum files, and a corrupt state file still fails the run.
+  their checksum files, and a corrupt state file still fails the run;
+- an ``availableNow`` drain unloads its state stores when they commit:
+  no checksum-writer thread outlives the drain, the stores snapshot
+  themselves, and the key is restored afterwards.
 """
 
 from __future__ import annotations
@@ -194,3 +197,53 @@ def test_checkpoints_cross_managers_and_keep_verification(
     metrics = PipelineExecutor().execute(config, spark)
     assert metrics.status == "FAILED"
     assert "CANNOT_LOAD_STATE_STORE" in metrics.error_details
+
+
+@pytest.mark.parametrize(
+    "options, drain",
+    [
+        ({}, True),
+        ({"trigger": "availableNow"}, True),
+        ({"trigger": "processingTime=10 seconds"}, False),
+    ],
+    ids=["default", "available-now", "processing-time"],
+)
+def test_is_drain(options, drain):
+    assert st.is_drain(options) is drain
+
+
+SNAPSHOT_EVERY = "spark.sql.streaming.stateStore.minDeltasForSnapshot"
+
+
+def _checksum_threads(spark) -> int:
+    """Live JVM threads of Spark's checkpoint checksum writers, which a
+    loaded state store holds until it is unloaded."""
+    threads = spark.sparkContext._jvm.java.lang.Thread.getAllStackTraces().keySet()
+    return sum(1 for t in threads if t.getName().startswith("ChecksumCheckpointFileManager"))
+
+
+def test_drain_unloads_its_state_stores(spark, tmp_path, monkeypatch):
+    seen = []
+    write_stream = st.write_stream
+
+    def capture(*args, **kwargs):
+        seen.append(spark.conf.get(st.UNLOAD_ON_COMMIT, None))
+        return write_stream(*args, **kwargs)
+
+    monkeypatch.setattr(st, "write_stream", capture)
+    config, src, out = _stream_yaml(tmp_path)
+    before = _checksum_threads(spark)
+    spark.conf.set(SNAPSHOT_EVERY, "2")
+    try:
+        for name, rows in (("a", FIRST_DRAIN), ("b", SECOND_DRAIN), ("c", THIRD_DRAIN)):
+            _events(src / f"{name}.json", rows)
+            metrics = PipelineExecutor().execute(config, spark)
+            assert metrics.status == "SUCCESS", metrics.error_details
+            assert _checksum_threads(spark) <= before
+    finally:
+        spark.conf.unset(SNAPSHOT_EVERY)
+    assert seen == ["true"] * 3
+    assert spark.conf.get(st.UNLOAD_ON_COMMIT, None) is None
+    assert _windows(spark, out) == AFTER_THIRD
+    snapshots = list((tmp_path / "stream-ckpt" / "state" / "0").glob("*/*.snapshot"))
+    assert snapshots, "maintenance ran at commit and wrote snapshots"
