@@ -14131,10 +14131,8 @@ FROM agg
 # Gate window (the driver's correctness gate records the FIRST 50
 # entries of queries()). Computed by ``python tools/rotation.py
 # --emit-window`` under the staleness policy documented in COVERAGE.md.
-# Round-12 window (VERDICT r11 asks #2/#3): the 10 _ROUND_PINS whose
-# semantics changed this round lead (the p-value columns on the test
-# family + the five ADVICE-r12 fixes), then the OLDEST driver rows —
-# all 34 r3-vintage queries and the 6 stalest r4 rows. cox/pca are
+# The 10 _ROUND_PINS lead, then the OLDEST recorded rows — all 25
+# r07-vintage queries and the 15 stalest r08 rows. cox/pca are
 # hard-excluded (_EXCLUDE_NO_ORACLE: rows-only forever; a slot spent
 # there is a stale query not re-recorded). The rotation policy is now
 # recorded-round-primary, so the stale tail drains ~40 rows/round by
@@ -14151,46 +14149,46 @@ _GATE_WINDOW: list[str] = [
     "fdr_by",
     "tfidf",
     "aalen_johansen",
-    "incremental_minhash",
-    "minhash_lsh",
-    "ann_ivf_trained",
-    "streaming_join",
-    "incremental_dedup",
-    "lm_score",
-    "embed_media",
-    "image_resize",
-    "model_score",
-    "url_features",
-    "ann_ivf",
-    "ann_lsh",
-    "clean_text",
-    "roundtrip_orc",
-    "cube",
-    "join_anti",
-    "fingerprint",
-    "join_full",
-    "join_right",
-    "json_extract",
-    "roundtrip_csv",
-    "roundtrip_json",
-    "window_session",
-    "window_sliding",
-    "resample_ffill",
-    "resample_origin",
-    "profile",
-    "streaming_gaps",
-    "pmi",
-    "unpivot",
-    "resample_linear",
-    "bm25",
-    "cms_prune",
-    "cms_topk",
-    "incremental_aggregate",
-    "scd2",
-    "top_paths",
-    "grouping_sets",
-    "interval_join",
-    "trending",
+    "expectations",
+    "triangle_count",
+    "cusum",
+    "entropy",
+    "js_divergence",
+    "kl_divergence",
+    "kmv_distinct",
+    "kmv_jaccard",
+    "psi_drift",
+    "robust_scale",
+    "rolling_active",
+    "target_encode",
+    "time_rollup",
+    "vocab_overlap",
+    "keyword_tag",
+    "fold_accents",
+    "gopher_rules",
+    "script_profile",
+    "prefix_jaccard",
+    "streaming_rollup",
+    "roundtrip_xml",
+    "bloom_semi_join",
+    "parquet_stats",
+    "streaming_cusum",
+    "streaming_scd2",
+    "multiple_regression",
+    "benford",
+    "discount_elasticity",
+    "feature_pipeline",
+    "impute",
+    "pareto",
+    "prop_ztest",
+    "quantile_clip",
+    "quantile_normalize",
+    "reorder_intervals",
+    "topk_recall",
+    "trimmed_mean",
+    "welch_ttest",
+    "bfs_distance",
+    "pagerank",
 ]
 
 

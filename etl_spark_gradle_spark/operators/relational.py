@@ -111,15 +111,17 @@ def pin_bounded(df: DataFrame, max_bytes: int | None = None) -> DataFrame:
     lineage so executor loss recomputes instead of failing, at the
     cost of cache-memory pressure (blocks are LRU-evicted and freed
     when the plan is GC'd — constructors cannot unpersist what their
-    callers still reference)."""
+    callers still reference). A relation whose estimate fails is of
+    unknown size, so it persists too: cutting the lineage of a
+    relation that may be huge is the riskier trade."""
     limit = PIN_MAX_BYTES if max_bytes is None else int(max_bytes)
     try:
         est = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:  # estimation failure must never break the plan
-        est = limit  # unknown -> treat as small (pin, the r12 posture)
-    if est <= limit:
+        est = None
+    if est is not None and est <= limit:
         return df.localCheckpoint(eager=False)
     from pyspark import StorageLevel
 

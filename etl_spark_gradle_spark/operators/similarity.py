@@ -610,22 +610,32 @@ def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
 def _dlit(x: float) -> str:
     """Shortest-round-trip double literal for SQL text: repr(x) parses
     back (Double.parseDouble is correctly rounded) to the identical
-    IEEE double that ``F.lit(x)`` embeds."""
-    return repr(float(x)) + "D"
+    IEEE double that ``F.lit(x)`` embeds. inf/nan have no literal
+    syntax, so they are spelled as string casts."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return repr(x) + "D"
 
 
-def srp_signature_sql(vec_sql: str, planes: list[list[float]]) -> str:
+def srp_signature_sql(vec_col: str, planes: list[list[float]]) -> str:
     """SQL-text twin of :func:`srp_signature`: same expressions in the
     same order (zip_with casts, 0.0 seed, left-fold accumulation, the
     ``>= 0`` sign test), rendered as ONE string for a single ``F.expr``
     parse. Built per-Column, a 32-bit signature over dim-64 planes
     costs ~4.5k py4j round trips per call site (~3.5 s of ann_lsh's
-    sweep build, r13 profile); parsed as text it is one round trip."""
+    sweep build, r13 profile); parsed as text it is one round trip.
+    ``vec_col`` is a column name, not SQL: it is backtick-quoted (an
+    embedded backtick doubled), so names with spaces, hyphens or
+    reserved words parse."""
+    vec = "`" + vec_col.replace("`", "``") + "`"
     bits = []
     for plane in planes:
         arr = "array(" + ", ".join(_dlit(x) for x in plane) + ")"
         d = (
-            f"aggregate(zip_with({vec_sql}, {arr}, "
+            f"aggregate(zip_with({vec}, {arr}, "
             f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
             f"0.0D, (acc, v) -> acc + v)"
         )

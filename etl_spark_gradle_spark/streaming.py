@@ -29,6 +29,7 @@ sink with checkpointing.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
@@ -451,7 +452,7 @@ def stream_stream_join(
     return left.join(right, cond, jt)
 
 
-def _apply_trigger(writer, trigger: str):
+def _apply_trigger(stream_writer, trigger: str):
     """Translate the string ``trigger`` option onto a stream writer.
 
     ADVICE r9: an unrecognized value (e.g. 'once', or a typo of
@@ -459,13 +460,26 @@ def _apply_trigger(writer, trigger: str):
     intended bounded drain started as the default ASAP micro-batch
     trigger — an unbounded continuous query. Fail loudly instead."""
     if trigger == "availableNow":
-        return writer.trigger(availableNow=True)
+        return stream_writer.trigger(availableNow=True)
     if trigger.startswith("processingTime="):
-        return writer.trigger(processingTime=trigger.split("=", 1)[1])
+        return stream_writer.trigger(processingTime=trigger.split("=", 1)[1])
     raise ConfigError(
         "stream trigger must be 'availableNow' or "
         f"'processingTime=<interval>', got '{trigger}'"
     )
+
+
+def _start(
+    writer, checkpoint_location: str | None, query_name: str | None, trigger: str
+) -> StreamingQuery:
+    """Start a stream writer with the options every query here shares:
+    ``checkpointLocation`` (when given), ``queryName`` (when given) and
+    the ``trigger`` string (:func:`_apply_trigger`)."""
+    if checkpoint_location:
+        writer = writer.option("checkpointLocation", checkpoint_location)
+    if query_name:
+        writer = writer.queryName(query_name)
+    return _apply_trigger(writer, trigger).start()
 
 
 FILE_FORMATS = ("parquet", "json", "csv", "orc")
@@ -532,8 +546,6 @@ def write_stream(
             raise ConfigError("kafka stream sink requires 'checkpointLocation'")
         df = kafka_frame(df)
     writer = df.writeStream.format(fmt).outputMode(output_mode)
-    if options.get("queryName"):
-        writer = writer.queryName(options["queryName"])
     if fmt == "kafka":
         writer = writer.option(
             "kafka.bootstrap.servers",
@@ -543,14 +555,27 @@ def write_stream(
         if not options.get("path") or not options.get("checkpointLocation"):
             raise ConfigError("file stream sink requires 'path' and 'checkpointLocation'")
         writer = writer.option("path", options["path"])
-    if options.get("checkpointLocation"):
-        writer = writer.option("checkpointLocation", options["checkpointLocation"])
-    trigger = options.get("trigger", "availableNow")
-    writer = _apply_trigger(writer, trigger)
-    query = writer.start()
+    query = _start(
+        writer,
+        options.get("checkpointLocation"),
+        options.get("queryName"),
+        options.get("trigger", "availableNow"),
+    )
     if await_termination:
         query.awaitTermination()
     return query
+
+
+def _flatten_window(agg: DataFrame, window_type: str) -> DataFrame:
+    """Project a :func:`windowed_stream_agg` result's window struct
+    (``window``, or ``session_window`` for session windows) to flat
+    ``window_start``/``window_end`` columns ahead of the other columns."""
+    win = "session_window" if window_type.lower() == "session" else "window"
+    return agg.select(
+        F.col(f"{win}.start").alias("window_start"),
+        F.col(f"{win}.end").alias("window_end"),
+        *[c for c in agg.columns if c != win],
+    )
 
 
 def run_file_to_file_stream(
@@ -586,15 +611,12 @@ def run_file_to_file_stream(
         group_by=group_by,
         window_type=window_type,
     )
-    win_col = "session_window" if window_type.lower() == "session" else "window"
-    out = agg.select(
-        F.col(f"{win_col}.start").alias("window_start"),
-        F.col(f"{win_col}.end").alias("window_end"),
-        *[c for c in agg.columns if c != win_col],
-    )
     sink = dict(sink_options)
     sink.setdefault("trigger", "availableNow")
-    write_stream(out, sink, output_mode="append", await_termination=True)
+    write_stream(
+        _flatten_window(agg, window_type), sink, output_mode="append",
+        await_termination=True,
+    )
 
 
 def run_streaming_pipeline(config, spark: SparkSession) -> StreamingQuery:
@@ -660,12 +682,7 @@ def run_streaming_pipeline(config, spark: SparkSession) -> StreamingQuery:
                 group_by=_split_csv(opts.get("groupBy")) or None,
                 window_type=opts.get("windowType", "tumbling"),
             )
-            win = "session_window" if opts.get("windowType", "").lower() == "session" else "window"
-            df = df.select(
-                F.col(f"{win}.start").alias("window_start"),
-                F.col(f"{win}.end").alias("window_end"),
-                *[c for c in df.columns if c != win],
-            )
+            df = _flatten_window(df, opts.get("windowType", "tumbling"))
         elif t.type == "dedup":
             keys = _split_csv(opts.get("keys"))
             if not keys:
@@ -753,13 +770,9 @@ def stream_dedup_against_store(
             store_path
         )
 
-    writer = df.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_location
+    return _start(
+        df.writeStream.foreachBatch(_handle), checkpoint_location, query_name, trigger
     )
-    if query_name:
-        writer = writer.queryName(query_name)
-    writer = _apply_trigger(writer, trigger)
-    return writer.start()
 
 
 def stream_to_batch_sink(
@@ -789,13 +802,99 @@ def stream_to_batch_sink(
     def _handle(batch_df: DataFrame, batch_id: int) -> None:
         loader.load(batch_df, sink_config, run_id=f"b{batch_id}")
 
-    writer = df.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_location
+    return _start(
+        df.writeStream.foreachBatch(_handle), checkpoint_location, query_name, trigger
     )
-    if query_name:
-        writer = writer.queryName(query_name)
-    writer = _apply_trigger(writer, trigger)
-    return writer.start()
+
+
+def _hadoop_fs(spark: SparkSession, path_str: str):
+    """(FileSystem, Path) for ``path_str`` resolved through the
+    session's Hadoop conf — so version listing/pruning works on ANY
+    store the executors can write (HDFS, S3A, file:). The earlier
+    driver-local ``os.listdir`` silently saw nothing on non-local
+    stores, so every batch thought it was the first — silent rollup
+    corruption, the worst failure mode of a continuous aggregate."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path_str)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, p
+
+
+def _rollup_versions(spark: SparkSession, store_path: str) -> list[int]:
+    """Sorted ``v=<n>`` version ids under the store, [] if absent."""
+    fs, p = _hadoop_fs(spark, store_path)
+    if not fs.exists(p):
+        return []
+    out = []
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if name.startswith("v=") and name.split("=", 1)[1].isdigit():
+            out.append(int(name.split("=", 1)[1]))
+    return sorted(out)
+
+
+def _fold_store(
+    stream: DataFrame,
+    store_path: str,
+    fold: Callable[[DataFrame, DataFrame | None, int], DataFrame],
+    checkpoint_location: str,
+    trigger: str,
+    query_name: str | None,
+) -> StreamingQuery:
+    """Maintain a versioned parquet store from ``stream`` with
+    ``foreachBatch``: the one protocol behind :func:`stream_scd2_fold`,
+    :func:`stream_time_rollup`, :func:`stream_kmv_distinct`,
+    :func:`stream_topk` and :func:`stream_histogram`.
+
+    Batch ``batch_id`` reads the newest version ``v=<prev>`` with
+    ``prev < batch_id`` (``None`` when there is none), overwrites
+    ``<store_path>/v=<batch_id>`` with ``fold(batch_df, prev_df,
+    batch_id)`` and then prunes every version older than ``prev``.
+
+    Retry safety (exactly-once-effective under foreachBatch's
+    at-least-once delivery): never prune ``prev`` itself, so a retried
+    batch re-reads it. A batch that crashed after its write but before
+    the checkpoint commit re-resolves the same ``prev``, and with a
+    deterministic ``fold`` rewrites its own ``v=<batch_id>`` from the
+    same input; debris a crashed attempt left there is clobbered and
+    duplicates cannot compound. The store holds at most two versions
+    at any instant.
+
+    Versions are listed through the Hadoop FileSystem API, so HDFS and
+    S3A stores list correctly; on an eventually-consistent object store
+    swap the listing for a manifest/catalog pointer."""
+    # unloadOnCommit does not matter here: the state lives in parquet,
+    # not in state stores
+
+    def _handle(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        older = [v for v in _rollup_versions(spark, store_path) if v < batch_id]
+        prev = max(older) if older else None
+        prev_df = (
+            None if prev is None else spark.read.parquet(f"{store_path}/v={prev}")
+        )
+        fold(batch_df, prev_df, batch_id).write.mode("overwrite").parquet(
+            f"{store_path}/v={batch_id}"
+        )
+        if prev is not None:
+            fs, _ = _hadoop_fs(spark, store_path)
+            Path = spark._jvm.org.apache.hadoop.fs.Path
+            for v in _rollup_versions(spark, store_path):
+                if v < prev:
+                    fs.delete(Path(f"{store_path}/v={v}"), True)
+
+    return _start(
+        stream.writeStream.foreachBatch(_handle), checkpoint_location, query_name, trigger
+    )
+
+
+def _read_newest(spark: SparkSession, path: str, what: str) -> DataFrame:
+    """The newest ``v=<n>`` version a :func:`_fold_store` query wrote
+    under ``path``; ``ConfigError`` naming ``what`` when there is none."""
+    versions = _rollup_versions(spark, path)
+    if not versions:
+        raise ConfigError(f"no {what} versions under {path}")
+    return spark.read.parquet(f"{path}/v={versions[-1]}")
 
 
 def stream_scd2_fold(
@@ -812,19 +911,8 @@ def stream_scd2_fold(
     dimension: every micro-batch runs ``scd2_apply`` against the
     latest persisted dimension version and writes the next one —
     continuous CDC → dimension maintenance (the streaming sibling of
-    the batch ``type: scd2`` step).
-
-    Versioning protocol (exactly-once-effective under foreachBatch's
-    at-least-once retries): each batch writes ``<dim_path>/v=<epoch>``
-    and reads the newest version STRICTLY OLDER than its own batch id
-    — a retried batch re-reads the same input version and overwrites
-    its own output deterministically, so duplicates cannot compound.
-    Version dirs are discovered through the Hadoop FileSystem API (so
-    HDFS/S3A stores list correctly, not just local paths); on an
-    eventually-consistent object store, swap the listing for a
-    manifest/catalog pointer (documented trade). Superseded versions
-    (older than the one the latest batch read) are pruned after each
-    successful write, bounding the store at two versions.
+    the batch ``type: scd2`` step). Versioning, pruning and retry
+    safety: :func:`_fold_store`.
 
     Ordering: micro-batches arrive in order per the source's offsets;
     WITHIN a batch ``scd2_apply``'s contract applies (unique effective
@@ -833,53 +921,23 @@ def stream_scd2_fold(
     """
     from etl_spark_gradle_spark.operators.delta import scd2_apply, scd2_init
 
-    def _latest_version(spark: SparkSession, before: int) -> int | None:
-        older = [v for v in _rollup_versions(spark, dim_path) if v < before]
-        return max(older) if older else None
-
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _latest_version(spark, batch_id)
-        if prev is None:
+    def fold(batch_df: DataFrame, dim: DataFrame | None, batch_id: int) -> DataFrame:
+        if dim is None:
             dim = scd2_init(
                 batch_df.select(*keys, *attr_cols).limit(0),
                 keys,
                 attr_cols,
                 "1970-01-01",
             )
-        else:
-            dim = spark.read.parquet(f"{dim_path}/v={prev}")
-        nxt = scd2_apply(dim, batch_df, keys, attr_cols, effective_col)
-        nxt.write.mode("overwrite").parquet(f"{dim_path}/v={batch_id}")
-        # prune versions older than the one just read (never prev
-        # itself — a retried batch must still find it); bounds the
-        # store at two versions instead of one per batch forever
-        if prev is not None:
-            fs, _ = _hadoop_fs(spark, dim_path)
-            jvm = spark._jvm
-            for v in _rollup_versions(spark, dim_path):
-                if v < prev:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(f"{dim_path}/v={v}"),
-                        True,
-                    )
+        return scd2_apply(dim, batch_df, keys, attr_cols, effective_col)
 
-    writer = changes.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_location
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    writer = _apply_trigger(writer, trigger)
-    return writer.start()
+    return _fold_store(changes, dim_path, fold, checkpoint_location, trigger, query_name)
 
 
 def read_scd2_dimension(spark: SparkSession, dim_path: str) -> DataFrame:
     """Read the newest persisted version written by
     :func:`stream_scd2_fold`."""
-    versions = _rollup_versions(spark, dim_path)
-    if not versions:
-        raise ConfigError(f"no dimension versions under {dim_path}")
-    return spark.read.parquet(f"{dim_path}/v={max(versions)}")
+    return _read_newest(spark, dim_path, "dimension")
 
 
 def cusum_stream(
@@ -1018,18 +1076,15 @@ def stream_time_rollup(
     (:func:`~etl_spark_gradle_spark.operators.timeseries.time_rollup`
     is the batch build): every micro-batch's MERGEABLE bucket deltas
     (count / exact DECIMAL sum / min / max per level) fold into a
-    versioned parquet store; :func:`read_time_rollup` closes the
-    maintained state to the same schema the batch operator emits.
+    versioned parquet store (:func:`_fold_store`);
+    :func:`read_time_rollup` closes the maintained state to the same
+    schema the batch operator emits.
 
     Exactness: the store holds the mergeable representation, and
     count/decimal-sum/min/max merging is associative+commutative, so
     after ANY batch partitioning of the feed the store equals the
     batch operator run over all data at once (asserted in pytest and
-    the ``streaming_rollup`` oracle). Versioning protocol = the
-    ``stream_scd2_fold`` exactly-once-effective scheme: each batch
-    writes ``<store>/v=<batch_id>`` after reading the newest version
-    STRICTLY older than its own id, so foreachBatch retries re-read
-    the same input and deterministically overwrite their own output.
+    the ``streaming_rollup`` oracle).
 
     At 100 TB: per batch, one batch-sized fine-bucket groupBy + level
     re-aggregations of bucket tables + a store-sized merge groupBy —
@@ -1040,21 +1095,14 @@ def stream_time_rollup(
 
     group_by = group_by or []
 
-    def _latest_version(spark: SparkSession, before: int) -> int | None:
-        older = [v for v in _rollup_versions(spark, store_path) if v < before]
-        return max(older) if older else None
-
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, state: DataFrame | None, batch_id: int) -> DataFrame:
         delta = time_rollup(
             batch_df, time_col, value_cols, levels,
             group_by=group_by, origin=origin, closed=False,
         )
-        prev = _latest_version(spark, batch_id)
-        if prev is not None:
-            state = spark.read.parquet(f"{store_path}/v={prev}")
+        if state is not None:
             delta = state.unionByName(delta)
-        merged = delta.groupBy(
+        return delta.groupBy(
             *group_by, "level_seconds", "bucket_ts"
         ).agg(
             *[
@@ -1068,57 +1116,8 @@ def stream_time_rollup(
                 )
             ]
         )
-        merged.write.mode("overwrite").parquet(f"{store_path}/v={batch_id}")
-        # prune versions SUPERSEDED BY THE ONE WE JUST READ (v < prev),
-        # never prev itself: a foreachBatch retry of this same batch_id
-        # (crash after this write, before the checkpoint commit)
-        # re-resolves _latest_version(batch_id) == prev and must find
-        # it intact to deterministically rewrite v=batch_id. The store
-        # therefore holds at most two versions at any instant instead
-        # of growing unboundedly.
-        if prev is not None:
-            fs, _ = _hadoop_fs(spark, store_path)
-            jvm = spark._jvm
-            for v in _rollup_versions(spark, store_path):
-                if v < prev:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(f"{store_path}/v={v}"),
-                        True,
-                    )
 
-    writer = stream.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_location
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    writer = _apply_trigger(writer, trigger)
-    return writer.start()
-
-
-def _hadoop_fs(spark: SparkSession, path_str: str):
-    """(FileSystem, Path) for ``path_str`` resolved through the
-    session's Hadoop conf — so version listing/pruning works on ANY
-    store the executors can write (HDFS, S3A, file:). The earlier
-    driver-local ``os.listdir`` silently saw nothing on non-local
-    stores, so every batch thought it was the first — silent rollup
-    corruption, the worst failure mode of a continuous aggregate."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, p
-
-
-def _rollup_versions(spark: SparkSession, store_path: str) -> list[int]:
-    """Sorted ``v=<n>`` version ids under the store, [] if absent."""
-    fs, p = _hadoop_fs(spark, store_path)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith("v=") and name.split("=", 1)[1].isdigit():
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
+    return _fold_store(stream, store_path, fold, checkpoint_location, trigger, query_name)
 
 
 def read_time_rollup(spark: SparkSession, store_path: str) -> DataFrame:
@@ -1127,10 +1126,7 @@ def read_time_rollup(spark: SparkSession, store_path: str) -> DataFrame:
     with the string-roundtrip decimal→double sums and the fixed-order
     avg — byte-identical to a fresh batch ``time_rollup`` over the
     same data)."""
-    versions = _rollup_versions(spark, store_path)
-    if not versions:
-        raise ConfigError(f"no rollup versions under {store_path}")
-    state = spark.read.parquet(f"{store_path}/v={max(versions)}")
+    state = _read_newest(spark, store_path, "rollup")
     value_cols = [c[: -len("_cnt")] for c in state.columns if c.endswith("_cnt")]
     keep = [c for c in state.columns
             if not any(c.startswith(f"{v}_") for v in value_cols)]
@@ -1248,22 +1244,20 @@ def stream_kmv_distinct(
     from a stream — cardinality monitoring over unbounded feeds
     (distinct users per event type, distinct keys per tenant) without
     ever re-scanning history. The streaming twin of
-    ``operators.sketch.build_kmv``, on the ``stream_time_rollup``
+    ``operators.sketch.build_kmv``, on the :func:`_fold_store`
     versioned-store protocol: each micro-batch builds its own sketch
-    delta, unions it with the newest store version STRICTLY older than
-    its batch id, and re-merges with ``merge_kmv`` — whose semantics
-    (k smallest of the union of distinct-value hashes) make the fold
-    associative, commutative AND idempotent, so foreachBatch retries
-    and replayed batches cannot double-count (a duplicated value
-    hashes to the same cell; ``exactly-once`` holds by algebra, not
-    bookkeeping). After ANY batch partitioning of the feed the store
-    equals a fresh batch build over all data at once (asserted in
-    pytest and the ``streaming_kmv`` oracle).
+    delta, unions it with the prior store version and re-merges with
+    ``merge_kmv`` — whose semantics (k smallest of the union of
+    distinct-value hashes) make the fold associative, commutative AND
+    idempotent, so replayed batches cannot double-count (a duplicated
+    value hashes to the same cell; ``exactly-once`` holds by algebra,
+    not bookkeeping). After ANY batch partitioning of the feed the
+    store equals a fresh batch build over all data at once (asserted
+    in pytest and the ``streaming_kmv`` oracle).
 
     At 100 TB: per batch, one distinct-hash shuffle of the BATCH (the
     historical raw data is never re-read) + a store-sized merge; the
-    store is bounded at |groups| x k hashes. Superseded versions are
-    pruned to at most two, exactly like the rollup store.
+    store is bounded at |groups| x k hashes.
     """
     from etl_spark_gradle_spark.operators.sketch import build_kmv, merge_kmv
 
@@ -1276,57 +1270,26 @@ def stream_kmv_distinct(
                 f"stream_kmv_distinct column not in schema: {c}"
             )
 
-    def _latest_version(spark: SparkSession, before: int) -> int | None:
-        older = [v for v in _rollup_versions(spark, store_path) if v < before]
-        return max(older) if older else None
-
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, state: DataFrame | None, batch_id: int) -> DataFrame:
         delta = build_kmv(
             batch_df, group_by, value_col, k=int(k),
             estimate_col=None, k_col="kmv_k",
         )
-        prev = _latest_version(spark, batch_id)
-        if prev is not None:
-            state = spark.read.parquet(f"{store_path}/v={prev}").select(
-                *group_by, "kmv", "kmv_k"
-            )
-            delta = state.unionByName(delta)
-        merged = merge_kmv(
+        if state is not None:
+            delta = state.select(*group_by, "kmv", "kmv_k").unionByName(delta)
+        return merge_kmv(
             delta, group_by, k=int(k), sketch_col="kmv",
             estimate_col="distinct_est", k_col="kmv_k",
         )
-        merged.write.mode("overwrite").parquet(f"{store_path}/v={batch_id}")
-        # prune versions superseded by the one we just read (never
-        # prev itself — a retry of this batch_id must find it intact;
-        # same rationale as stream_time_rollup)
-        if prev is not None:
-            fs, _ = _hadoop_fs(spark, store_path)
-            jvm = spark._jvm
-            for v in _rollup_versions(spark, store_path):
-                if v < prev:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(f"{store_path}/v={v}"),
-                        True,
-                    )
 
-    writer = stream.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_location
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    writer = _apply_trigger(writer, trigger)
-    return writer.start()
+    return _fold_store(stream, store_path, fold, checkpoint_location, trigger, query_name)
 
 
 def read_kmv_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Read the newest maintained KMV version — same columns a batch
     ``build_kmv(..., k_col='kmv_k')`` + estimate emits: ``(group…,
     kmv, distinct_est, kmv_k)``."""
-    versions = _rollup_versions(spark, store_path)
-    if not versions:
-        raise ConfigError(f"no kmv versions under {store_path}")
-    return spark.read.parquet(f"{store_path}/v={max(versions)}")
+    return _read_newest(spark, store_path, "kmv")
 
 
 def stream_topk(
@@ -1345,21 +1308,19 @@ def stream_topk(
     SKUs per region) with bounded state and a PROVEN undercount
     guarantee, no matter how long the stream runs.
 
-    Protocol = the ``stream_kmv_distinct`` versioned-store scheme:
-    each micro-batch builds its own exact-count summary delta
-    (:func:`operators.sketch.build_mg`), unions it with the newest
-    store version STRICTLY older than its batch id, and re-prunes
-    with :func:`operators.sketch.merge_mg` — the mergeable-summaries
+    Protocol = :func:`_fold_store`: each micro-batch builds its own
+    exact-count summary delta (:func:`operators.sketch.build_mg`),
+    unions it with the prior store version and re-prunes with
+    :func:`operators.sketch.merge_mg` — the mergeable-summaries
     theorem (Agarwal et al. 2012) keeps ``true_count − weight ≤
     mg_err`` through any batch partitioning, and when per-group
     distinct cardinality never exceeds ``capacity`` the maintained
     weights are EXACT counts (d = 0 at every step), which is what
-    the registered oracle gates. foreachBatch retries overwrite
-    their own deterministic output (exactly-once-effective).
+    the registered oracle gates.
 
     At 100 TB: per batch, one batch-sized (group, value) count
     shuffle + a store-sized merge; state is bounded at |groups| ×
-    capacity rows. Superseded versions prune to at most two."""
+    capacity rows."""
     from etl_spark_gradle_spark.operators.sketch import build_mg, merge_mg
 
     group_by = list(group_by)
@@ -1369,42 +1330,19 @@ def stream_topk(
         if c not in stream.columns:
             raise ConfigError(f"stream_topk column not in schema: {c}")
 
-    def _latest_version(spark: SparkSession, before: int) -> int | None:
-        older = [v for v in _rollup_versions(spark, store_path) if v < before]
-        return max(older) if older else None
-
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, state: DataFrame | None, batch_id: int) -> DataFrame:
         delta = build_mg(
             batch_df, group_by, value_col, capacity=int(capacity),
         ).withColumn("_src", F.lit(f"b{batch_id}"))
-        prev = _latest_version(spark, batch_id)
-        if prev is not None:
-            state = spark.read.parquet(f"{store_path}/v={prev}").select(
+        if state is not None:
+            delta = state.select(
                 *group_by, "value", "mg_weight", "mg_err"
-            ).withColumn("_src", F.lit("state"))
-            delta = state.unionByName(delta)
-        merged = merge_mg(
+            ).withColumn("_src", F.lit("state")).unionByName(delta)
+        return merge_mg(
             delta, group_by, capacity=int(capacity), src_col="_src",
         )
-        merged.write.mode("overwrite").parquet(f"{store_path}/v={batch_id}")
-        if prev is not None:
-            fs, _ = _hadoop_fs(spark, store_path)
-            jvm = spark._jvm
-            for v in _rollup_versions(spark, store_path):
-                if v < prev:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(f"{store_path}/v={v}"),
-                        True,
-                    )
 
-    writer = stream.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_location
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    writer = _apply_trigger(writer, trigger)
-    return writer.start()
+    return _fold_store(stream, store_path, fold, checkpoint_location, trigger, query_name)
 
 
 def read_topk_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -1412,10 +1350,7 @@ def read_topk_store(spark: SparkSession, store_path: str) -> DataFrame:
     value, mg_weight, mg_err)`` — weights undercount true counts by
     at most ``mg_err``; exact when cardinality stayed within
     capacity."""
-    versions = _rollup_versions(spark, store_path)
-    if not versions:
-        raise ConfigError(f"no topk versions under {store_path}")
-    return spark.read.parquet(f"{store_path}/v={max(versions)}")
+    return _read_newest(spark, store_path, "topk")
 
 
 def stream_histogram(
@@ -1435,24 +1370,19 @@ def stream_histogram(
     (latency percentiles per endpoint, score distributions per
     source) with bounded state: each micro-batch builds its own
     histogram delta (:func:`operators.sketch.build_histogram_sketch`)
-    and vector-adds it into the newest store version STRICTLY older
-    than its batch id (:func:`operators.sketch.merge_histograms` —
-    counts are counts, the merge is EXACT, not approximate). Close
-    the maintained state to quantiles with
-    ``operators.sketch.histogram_quantile`` over
+    and vector-adds it into the prior store version
+    (:func:`operators.sketch.merge_histograms` — counts are counts,
+    the merge is EXACT, not approximate). Close the maintained state
+    to quantiles with ``operators.sketch.histogram_quantile`` over
     :func:`read_histogram_store`.
 
-    Versioning protocol = ``stream_time_rollup``: foreachBatch
-    retries re-read the same prior state and deterministically
-    overwrite their own output (exactly-once-effective). After ANY
-    batch partitioning the store equals a fresh batch build over the
-    whole feed — asserted in pytest and the ``streaming_histogram``
-    oracle.
+    Versioning protocol = :func:`_fold_store`. After ANY batch
+    partitioning the store equals a fresh batch build over the whole
+    feed — asserted in pytest and the ``streaming_histogram`` oracle.
 
     At 100 TB: per batch, ONE hash aggregation compressing the batch
     to |groups| × (bins+2) longs + a store-sized vector add; state is
-    bounded at |groups| rows. Superseded versions prune to at most
-    two."""
+    bounded at |groups| rows."""
     from etl_spark_gradle_spark.operators.sketch import (
         build_histogram_sketch,
         merge_histograms,
@@ -1469,42 +1399,18 @@ def stream_histogram(
                 f"stream_histogram column not in schema: {c}"
             )
 
-    def _latest_version(spark: SparkSession, before: int) -> int | None:
-        older = [v for v in _rollup_versions(spark, store_path) if v < before]
-        return max(older) if older else None
-
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, state: DataFrame | None, batch_id: int) -> DataFrame:
         delta = build_histogram_sketch(
             batch_df, group_by, value_col,
             lo=float(lo), hi=float(hi), bins=int(bins),
         )
-        prev = _latest_version(spark, batch_id)
-        if prev is not None:
-            state = spark.read.parquet(f"{store_path}/v={prev}").select(
-                *group_by, "hist_counts"
-            )
-            delta = merge_histograms(
-                state.unionByName(delta), group_by
-            )
-        delta.write.mode("overwrite").parquet(f"{store_path}/v={batch_id}")
-        if prev is not None:
-            fs, _ = _hadoop_fs(spark, store_path)
-            jvm = spark._jvm
-            for v in _rollup_versions(spark, store_path):
-                if v < prev:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(f"{store_path}/v={v}"),
-                        True,
-                    )
+        if state is None:
+            return delta
+        return merge_histograms(
+            state.select(*group_by, "hist_counts").unionByName(delta), group_by
+        )
 
-    writer = stream.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_location
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    writer = _apply_trigger(writer, trigger)
-    return writer.start()
+    return _fold_store(stream, store_path, fold, checkpoint_location, trigger, query_name)
 
 
 def read_histogram_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -1512,10 +1418,7 @@ def read_histogram_store(spark: SparkSession, store_path: str) -> DataFrame:
     hist_counts)`` — bins+2 exact long counts (underflow, interior,
     overflow), same schema a batch ``build_histogram_sketch``
     emits."""
-    versions = _rollup_versions(spark, store_path)
-    if not versions:
-        raise ConfigError(f"no histogram versions under {store_path}")
-    return spark.read.parquet(f"{store_path}/v={max(versions)}")
+    return _read_newest(spark, store_path, "histogram")
 
 
 def ewma_stream(

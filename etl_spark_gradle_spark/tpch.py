@@ -977,10 +977,13 @@ def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     # order-level stats a window over it and the late pairs a plain
     # filter: n_supp == COUNT(*) per order over distinct pairs,
     # n_late_supp == Σ any_late, late pairs == any_late rows. Same
-    # rows, one scan each, no Expand.
+    # rows, one scan each, no Expand. A NULL supplier is dropped first:
+    # COUNT(DISTINCT l_suppkey) ignores it, a group of its own would not.
     from pyspark.sql.window import Window
 
-    sup_stat = lines.groupBy("l_orderkey", "l_suppkey").agg(
+    sup_stat = lines.where(F.col("l_suppkey").isNotNull()).groupBy(
+        "l_orderkey", "l_suppkey"
+    ).agg(
         F.max("is_late").alias("any_late")
     )
     w_ord = Window.partitionBy("l_orderkey")

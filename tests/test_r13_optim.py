@@ -331,6 +331,32 @@ def test_pin_bounded_threshold_paths(spark, sf_dir):
     big.unpersist()
 
 
+def test_pin_bounded_persists_when_estimate_fails(spark):
+    """An unestimable relation is of unknown size: it keeps its lineage
+    (persist MEMORY_AND_DISK) instead of a lineage-cutting
+    localCheckpoint."""
+    from etl_spark_gradle_spark.operators.relational import pin_bounded
+
+    class NoEstimate:
+        def __init__(self, jdf):
+            self._jdf = jdf
+
+        def queryExecution(self):
+            raise RuntimeError("no size estimate")
+
+        def __getattr__(self, name):
+            return getattr(self._jdf, name)
+
+    df = spark.range(10)
+    df._jdf = NoEstimate(df._jdf)
+    out = pin_bounded(df)
+    try:
+        assert out.storageLevel.useMemory and out.storageLevel.useDisk
+        assert out.count() == 10
+    finally:
+        out.unpersist()
+
+
 def test_triangle_count_unchanged_after_size_aware_pins(spark):
     from etl_spark_gradle_spark.operators.graph import triangle_count
 
@@ -362,3 +388,31 @@ def test_srp_signature_sql_bit_identical(spark):
     ).collect()
     for r in both:
         assert list(r["a"]) == list(r["b"]), r["id"]
+
+
+
+def test_srp_signature_sql_quotes_column_and_spells_non_finite(spark):
+    """A vector column whose name needs quoting and non-finite plane
+    values both parse, and the bits still match the Column build."""
+    from etl_spark_gradle_spark.operators import similarity as sim
+
+    planes = [
+        [1.0, -2.5, 0.25],
+        [float("inf"), 0.0, 1.0],
+        [float("-inf"), 1.0, 0.0],
+        [float("nan"), 1.0, 1.0],
+    ]
+    df = spark.createDataFrame(
+        [(i, [i - 2.0, 1.5 - i, 0.5]) for i in range(5)],
+        "id long, `emb vec` array<double>",
+    )
+    both = df.select(
+        "id",
+        sim.srp_signature(F.col("emb vec"), planes).alias("a"),
+        F.expr(sim.srp_signature_sql("emb vec", planes)).alias("b"),
+    ).collect()
+    assert len(both) == 5
+    for r in both:
+        assert list(r["a"]) == list(r["b"]), r["id"]
+    tick = df.withColumnRenamed("emb vec", "a`b")
+    assert tick.select(F.expr(sim.srp_signature_sql("a`b", planes))).count() == 5

@@ -173,3 +173,39 @@ def test_q11_threshold_is_exact_decimal(spark, sf_dir):
     # NATION_5 suppliers: 10 suppliers over 25 nations)
     if v:
         assert len(got) > 0
+
+
+
+def test_q21_null_supplier_does_not_change_numwait(spark, tmp_path):
+    """COUNT(DISTINCT l_suppkey) semantics: a NULL supplier line neither
+    adds a supplier to an order nor a late supplier."""
+    import datetime as dt
+
+    d = dt.datetime
+    spark.createDataFrame(
+        [(k, "F", d(2020, 1, 1)) for k in (1, 2, 3)],
+        "o_orderkey long, o_orderstatus string, o_orderdate timestamp",
+    ).write.parquet(str(tmp_path / "orders.parquet"))
+    spark.createDataFrame(
+        [(10, "Supplier#10"), (20, "Supplier#20")],
+        "s_suppkey long, s_name string",
+    ).write.parquet(str(tmp_path / "supplier.parquet"))
+    late, on_time = d(2020, 6, 1), d(2020, 1, 10)
+    lines = [
+        (1, 10, late), (1, 20, on_time),  # waits on 10
+        (2, 10, late),                    # single supplier
+        (3, 20, late), (3, 10, on_time),  # waits on 20
+    ]
+    nulls = [(2, None, on_time), (3, None, late)]
+
+    def numwait(rows, name):
+        spark.createDataFrame(
+            rows, "l_orderkey long, l_suppkey long, l_shipdate timestamp"
+        ).write.parquet(str(tmp_path / name / "lineitem.parquet"))
+        for t in ("orders", "supplier"):
+            (tmp_path / name / f"{t}.parquet").symlink_to(tmp_path / f"{t}.parquet")
+        return [tuple(r) for r in tpch.q21(spark, str(tmp_path / name)).collect()]
+
+    want = [("Supplier#10", 1), ("Supplier#20", 1)]
+    assert numwait(lines, "plain") == want
+    assert numwait(lines + nulls, "with_nulls") == want
