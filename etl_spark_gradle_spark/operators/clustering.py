@@ -366,7 +366,7 @@ def kmeans(
             "_c array<array<long>>",
         )
 
-    kk = int(k)
+    kk = min(int(k), len(centroids))  # fewer usable seed rows than k
     cframe = _centroid_frame(centroids)
     for it in range(int(iterations)):
         if it and it % _LLOYD_CHUNK == 0:

@@ -1118,8 +1118,13 @@ class DedupTransformer:
     ``idColumn``, ``contentColumn``, ``threshold``, ``shingleSize``
     (3), ``maxShingleDf`` (stop-shingle cap).
 
+    A stream takes ``strategy: exact`` with ``keys``, its state bounded
+    by an optional ``timeColumn`` watermark (``watermarkDelay``).
+
     Validates like the relational transformers (parity contract:
     ``core/DataTransformer.scala:36-40``)."""
+
+    streamable = True
 
     def validate(self, df: DataFrame, config) -> ValidationResult:
         opts = config.options
@@ -1201,6 +1206,15 @@ class DedupTransformer:
 
             raise TransformationError("dedup config invalid: " + "; ".join(result.errors))
         opts = config.options
+        keys = [k.strip() for k in opts.get("keys", "").split(",") if k.strip()]
+        if df.isStreaming:
+            from etl_spark_gradle_spark import streaming
+            from etl_spark_gradle_spark.operators.relational import TransformationError
+
+            if opts.get("strategy", "exact").lower() != "exact" or not keys:
+                raise TransformationError("streaming dedup requires 'keys' with strategy exact")
+            watermark = opts.get("watermarkDelay", "10 minutes")
+            return streaming.stream_dedup(df, keys, opts.get("timeColumn"), watermark)
         if opts.get("strategy", "exact").lower() == "containment":
             pairs = containment_pairs(
                 df,
@@ -1292,7 +1306,6 @@ class DedupTransformer:
                 bands=int(opts.get("bands", 16)),
             ).filter(F.col("est_jaccard") >= float(opts.get("threshold", 0.8)))
             return dedup_from_pairs(df, pairs, opts["idColumn"])
-        keys = [k.strip() for k in opts.get("keys", "").split(",") if k.strip()]
         return exact_dedup(
             df,
             keys=keys or None,

@@ -1467,6 +1467,8 @@ class _BaseTransformer:
 class FilterTransformer(_BaseTransformer):
     """Parity: ``transformer/FilterTransformer.scala:22-54``."""
 
+    streamable = True
+
     def validate(self, df: DataFrame, config: TransformationConfig) -> ValidationResult:
         if not config.options.get("condition", "").strip():
             return ValidationResult.fail("filter requires 'condition'")
@@ -1496,6 +1498,8 @@ class SqlTransformer(_BaseTransformer):
 
 class MapTransformer(_BaseTransformer):
     """Parity: ``transformer/MapTransformer.scala:24-73``."""
+
+    streamable = True
 
     def validate(self, df: DataFrame, config: TransformationConfig) -> ValidationResult:
         spec = config.options.get("expressions", "")
@@ -1739,7 +1743,10 @@ class IntervalJoinTransformer(_BaseTransformer):
 class WindowingTransformer(_BaseTransformer):
     """Parity: ``transformer/WindowingTransformer.scala:28-99``; accepts
     both ``timeColumn`` (code) and ``timestampColumn`` (shipped YAML)
-    spellings (SURVEY §2.3)."""
+    spellings (SURVEY §2.3). A stream is windowed behind a
+    ``watermarkDelay`` watermark (default 10 minutes)."""
+
+    streamable = True
 
     def validate(self, df: DataFrame, config: TransformationConfig) -> ValidationResult:
         errors = []
@@ -1762,8 +1769,7 @@ class WindowingTransformer(_BaseTransformer):
 
     def _apply(self, df, config, ctx):
         opts = config.options
-        return window_aggregate(
-            df,
+        args = dict(
             time_column=opts.get("timeColumn") or opts["timestampColumn"],
             window_duration=opts["windowDuration"],
             aggregations=list(config.aggregations),
@@ -1771,6 +1777,14 @@ class WindowingTransformer(_BaseTransformer):
             slide_duration=opts.get("slideDuration"),
             group_by=_split_csv(opts.get("groupBy")) or None,
         )
+        if not df.isStreaming:
+            return window_aggregate(df, **args)
+        from etl_spark_gradle_spark import streaming
+
+        agg = streaming.windowed_stream_agg(
+            df, watermark_delay=opts.get("watermarkDelay", "10 minutes"), **args
+        )
+        return streaming._flatten_window(agg)
 
 
 class SetOpTransformer(_BaseTransformer):

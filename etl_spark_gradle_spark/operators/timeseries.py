@@ -1982,15 +1982,19 @@ def nelson_aalen(
 
 class EwmaTransformer:
     """Registry adapter (``type: ewma``). Options: ``keyColumns`` csv
-    (required), ``timeColumn``, ``valueColumn`` (required), ``alpha``
-    (required, in (0, 1]), ``outputColumn`` (default ``ewma``)."""
+    (required; or ``keyColumn``), ``timeColumn``, ``valueColumn``
+    (required), ``alpha`` (required, in (0, 1]), ``outputColumn``
+    (default ``ewma``). A stream takes one key, plus ``tiebreakColumn``
+    and ``watermarkDelay``."""
+
+    streamable = True
 
     def validate(self, df: DataFrame, config):
         from etl_spark_gradle_spark.plans.config import ValidationResult
 
         errors = []
         opts = config.options
-        keys = _split_csv(opts.get("keyColumns"))
+        keys = _split_csv(opts.get("keyColumns") or opts.get("keyColumn"))
         if not keys:
             errors.append("ewma requires 'keyColumns'")
         for opt in ("timeColumn", "valueColumn"):
@@ -2021,9 +2025,21 @@ class EwmaTransformer:
                 "ewma config invalid: " + "; ".join(result.errors)
             )
         opts = config.options
+        keys = _split_csv(opts.get("keyColumns") or opts.get("keyColumn"))
+        if df.isStreaming:
+            from etl_spark_gradle_spark import streaming
+
+            if len(keys) != 1:
+                raise TransformationError(f"streaming ewma takes one key column, got {keys}")
+            return streaming.ewma_stream(
+                df, keys[0], opts["timeColumn"], opts["valueColumn"], float(opts["alpha"]),
+                tiebreak_col=opts.get("tiebreakColumn"),
+                watermark_delay=opts.get("watermarkDelay", "10 minutes"),
+                output_col=opts.get("outputColumn", "ewma"),
+            )
         return ewma(
             df,
-            key_cols=_split_csv(opts["keyColumns"]),
+            key_cols=keys,
             order_col=opts["timeColumn"],
             value_col=opts["valueColumn"],
             alpha=float(opts["alpha"]),

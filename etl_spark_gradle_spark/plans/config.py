@@ -154,6 +154,13 @@ class PipelineConfig:
     # (readStream -> stateless/windowed transforms -> writeStream)
     streaming: bool = False
 
+    def __post_init__(self) -> None:
+        # a drain has no quality gate, and Spark cannot cache a stream
+        for key, used in (("quality", self.quality.enabled),
+                          ("performance.cacheIntermediate", self.performance.cache_intermediate)):
+            if self.streaming and used:
+                raise ConfigError(f"streaming: true does not support '{key}'")
+
 
 @dataclass(frozen=True)
 class RunContext:

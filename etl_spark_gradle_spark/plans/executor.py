@@ -31,6 +31,9 @@ Deliberate divergences for scale (SURVEY §4 anti-patterns):
   FAILED quality run may have written either of them (the quarantine
   is appended; ``file_incremental`` stays at-least-once). The run
   reports the error the reference's order would have raised first.
+- ``streaming: true`` (an extension) builds its plan in ``build_plan``
+  too, from a ``readStream`` source, with only the transformers that
+  declare ``streamable``. Its output carries no ``_lineage`` column.
 - ``shufflePartitions`` is applied for the run (batch and streaming) and
   restored afterwards instead of leaking into later pipelines on a
   shared session.
@@ -64,6 +67,7 @@ from pyspark.sql import functions as F
 from etl_spark_gradle_spark import lineage as lineage_mod
 from etl_spark_gradle_spark.observability import MetricsCollector
 from etl_spark_gradle_spark.plans.config import (
+    ConfigError,
     ExecutionMetrics,
     PipelineConfig,
     RunContext,
@@ -141,23 +145,29 @@ class PipelineExecutor:
         input_df: DataFrame | None = None,
     ) -> tuple[DataFrame, DataFrame, list[str], Observation, list[DataFrame]]:
         """Compose the full lazy plan (phase structure parity:
-        ``pipeline/PipelineExecutor.scala:30-48``).
+        ``pipeline/PipelineExecutor.scala:30-48``), batch or streaming.
 
         ``input_df`` lets the quality path feed the valid branch through
         the SAME performance/transformation plumbing as the plain path.
         Returns (extracted, transformed, lineage_steps, extract_obs,
         cached_frames); ``extract_obs`` rides the eventual sink action —
-        no separate counting job.
+        no separate counting job. A streaming plan reads a ``readStream``
+        and has no ``extract_obs``; its steps pick their streaming form
+        from ``df.isStreaming``.
         """
-        if input_df is None:
+        if input_df is not None:
+            df = input_df
+        elif config.streaming:
+            from etl_spark_gradle_spark import streaming
+
+            df = streaming.read_source_stream(with_resolved_credentials(config.source), ctx.spark)
+        else:
             extractor = self.extractors.get(config.source.type)
             if extractor is None:
                 raise KeyError(
                     f"no extractor registered for source type '{config.source.type}'"
                 )
             df = extractor.extract(with_resolved_credentials(config.source), ctx.spark)
-        else:
-            df = input_df
 
         # secondary sources → named temp views, available to join/setop/
         # range_join rightTable lookups. Lazy like everything else: a
@@ -186,9 +196,10 @@ class PipelineExecutor:
         if config.performance.repartition:
             df = df.repartition(config.performance.repartition)
 
-        if config.performance.skip_extract_count:
+        if config.performance.skip_extract_count or config.streaming:
             # no CollectMetrics barrier: downstream filters push all the
-            # way into the scan; records_extracted is reported as -1
+            # way into the scan; records_extracted is reported as -1.
+            # Spark raises on an Observation over a streaming Dataset
             extract_obs = None
         else:
             extract_obs = Observation(f"extract_{uuid.uuid4().hex[:8]}")
@@ -201,6 +212,11 @@ class PipelineExecutor:
             transformer = self.transformers.get(t_config.type)
             if transformer is None:
                 raise KeyError(f"no transformer registered for type '{t_config.type}'")
+            if config.streaming and not getattr(transformer, "streamable", False):
+                raise ConfigError(
+                    f"transformation '{t_config.type}' is not streamable — supported in "
+                    "streaming mode: filter, map, windowing, dedup, ewma"
+                )
             out = transformer.transform(out, t_config, ctx)
             steps.append(transformer.lineage_step(t_config))
             if config.performance.cache_intermediate:
@@ -218,16 +234,22 @@ class PipelineExecutor:
     ) -> ExecutionMetrics:
         """Plain run (parity: ``pipeline/PipelineExecutor.scala:23-83``).
         Routes to the quality-gated path when quality checks are enabled
-        (parity: ``Main.scala:105-123``), and to Structured Streaming
-        when the YAML declares ``streaming: true`` (extension)."""
-        if config.streaming:
-            return self._run_streaming(config, spark)
+        (parity: ``Main.scala:105-123``); a ``streaming: true`` pipeline
+        (extension, never quality-gated) runs as one drain."""
         if config.quality.enabled:
             return self.execute_with_quality(config, spark, collector)
         return self._run(config, spark, quality=False, collector=collector)
 
-    def _run_streaming(self, config: PipelineConfig, spark: SparkSession) -> ExecutionMetrics:
-        """``streaming: true`` mode — one availableNow drain.
+    def _drain(
+        self,
+        config: PipelineConfig,
+        ctx: RunContext,
+        collector: MetricsCollector,
+        metrics: ExecutionMetrics,
+    ) -> None:
+        """``streaming: true`` mode — one availableNow drain: the plan
+        ``build_plan`` builds, started by ``streaming.write_stream``
+        (``load`` spans the whole drain), with no lineage column.
 
         Shuffle partitions: ``performance.shufflePartitions`` when set,
         else min(session value, ``defaultParallelism``). AQE does not
@@ -255,36 +277,34 @@ class PipelineExecutor:
         none outlives the drain."""
         from etl_spark_gradle_spark import streaming
 
-        ctx = RunContext.create(config.pipeline_id, spark)
-        metrics = ExecutionMetrics(config.pipeline_id, ctx.run_id, start_timestamp=time.time())
-        try:
-            partitions = config.performance.shuffle_partitions or min(
-                int(spark.conf.get(SHUFFLE_PARTITIONS)), spark.sparkContext.defaultParallelism
-            )
-            settings = {SHUFFLE_PARTITIONS: partitions}
-            if streaming.local_checkpoint(spark, config.sink.options):
-                settings[streaming.CHECKPOINT_FILE_MANAGER] = streaming.FILE_SYSTEM_CHECKPOINTS
-            if streaming.is_drain(config.sink.options):
-                settings[streaming.UNLOAD_ON_COMMIT] = "true"
-            with session_conf(spark, settings):
-                query = streaming.run_streaming_pipeline(config, spark)
-            progress = query.recentProgress
-            # Spark keeps numRecentProgressUpdates - 1 entries, dropping
-            # the oldest: a full buffer may have lost batches
-            kept = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")) - 1
-            if len(progress) < kept:
-                metrics.records_extracted = sum(p.numInputRows for p in progress)
-                outputs = [p.sink.numOutputRows for p in progress]
-                metrics.records_loaded = sum(outputs) if min(outputs, default=0) >= 0 else -1
-            else:
-                metrics.records_extracted = metrics.records_loaded = -1
-            metrics.records_transformed = metrics.records_loaded
-            metrics.status = "SUCCESS"
-        except Exception as e:  # noqa: BLE001 — failure contract mirrors _run
-            metrics.status = "FAILED"
-            metrics.error_details = f"{type(e).__name__}: {e}"
-        metrics.end_timestamp = time.time()
-        return metrics
+        spark = ctx.spark
+        sink = with_resolved_credentials(config.sink).options
+        partitions = config.performance.shuffle_partitions or min(
+            int(spark.conf.get(SHUFFLE_PARTITIONS)), spark.sparkContext.defaultParallelism
+        )
+        settings = {SHUFFLE_PARTITIONS: partitions}
+        if streaming.local_checkpoint(spark, sink):
+            settings[streaming.CHECKPOINT_FILE_MANAGER] = streaming.FILE_SYSTEM_CHECKPOINTS
+        if streaming.is_drain(sink):
+            settings[streaming.UNLOAD_ON_COMMIT] = "true"
+        with session_conf(spark, settings):
+            with collector.phase("plan"):
+                transformed = self.build_plan(config, ctx)[1]
+            with collector.phase("load"):
+                query = streaming.write_stream(
+                    transformed, sink, output_mode="append", await_termination=True
+                )
+        progress = query.recentProgress
+        # Spark keeps numRecentProgressUpdates - 1 entries, dropping
+        # the oldest: a full buffer may have lost batches
+        kept = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")) - 1
+        if len(progress) < kept:
+            metrics.records_extracted = sum(p.numInputRows for p in progress)
+            outputs = [p.sink.numOutputRows for p in progress]
+            metrics.records_loaded = sum(outputs) if min(outputs, default=0) >= 0 else -1
+        else:
+            metrics.records_extracted = metrics.records_loaded = -1
+        metrics.records_transformed = metrics.records_loaded
 
     def execute_with_quality(
         self,
@@ -315,99 +335,102 @@ class PipelineExecutor:
         metrics.status = "RUNNING"
         cached: list[DataFrame] = []
         try:
-            with session_conf(spark, {SHUFFLE_PARTITIONS: config.performance.shuffle_partitions}):
-                extractor = self.extractors.get(config.source.type)
-                if extractor is None:
-                    raise KeyError(
-                        f"no extractor registered for source type '{config.source.type}'"
-                    )
-
-                # the quality phase spans the gate's side actions, from
-                # submission to join, so it overlaps plan and load
-                with collector.phase("quality") if quality else nullcontext():
-                    input_df, pending, report = None, None, None
-                    if quality:
-                        # imported here, not at module top: quality.py imports
-                        # plans.config, and a module-top import would make
-                        # "import etl_spark_gradle_spark.quality" fail standalone
-                        # (plans/__init__ -> executor -> partially-initialized quality)
-                        from etl_spark_gradle_spark.quality import quality_gate
-
-                        extracted = extractor.extract(
-                            with_resolved_credentials(config.source), ctx.spark
+            if config.streaming:
+                self._drain(config, ctx, collector, metrics)
+            else:
+                partitions = config.performance.shuffle_partitions
+                with session_conf(spark, {SHUFFLE_PARTITIONS: partitions}):
+                    extractor = self.extractors.get(config.source.type)
+                    if extractor is None:
+                        raise KeyError(
+                            f"no extractor registered for source type '{config.source.type}'"
                         )
-                        input_df, pending = quality_gate(
-                            extracted,
-                            config.quality,
-                            config.pipeline_id,
-                            ctx.run_id,
-                            schema_path=config.source.schema_path,
-                        )
-                    try:
-                        with collector.phase("plan"):
-                            extracted_df, transformed, steps, extract_obs, cached = (
-                                self.build_plan(config, ctx, input_df=input_df)
+
+                    # the quality phase spans the gate's side actions, from
+                    # submission to join, so it overlaps plan and load
+                    with collector.phase("quality") if quality else nullcontext():
+                        input_df, pending, report = None, None, None
+                        if quality:
+                            # imported here, not at module top: quality.py imports
+                            # plans.config, and a module-top import would make
+                            # "import etl_spark_gradle_spark.quality" fail standalone
+                            # (plans/__init__ -> executor -> partially-initialized quality)
+                            from etl_spark_gradle_spark.quality import quality_gate
+
+                            extracted = extractor.extract(
+                                with_resolved_credentials(config.source), ctx.spark
+                            )
+                            input_df, pending = quality_gate(
+                                extracted,
+                                config.quality,
+                                config.pipeline_id,
+                                ctx.run_id,
+                                schema_path=config.source.schema_path,
+                            )
+                        try:
+                            with collector.phase("plan"):
+                                extracted_df, transformed, steps, extract_obs, cached = (
+                                    self.build_plan(config, ctx, input_df=input_df)
+                                )
+
+                            source_id = extractor.source_identifier(config.source)
+                            meta = lineage_mod.build_lineage(config.source.type, source_id, steps)
+                            final = lineage_mod.stamp_lineage(
+                                transformed, meta, config.pipeline_id, ctx.run_id
                             )
 
-                        meta = lineage_mod.build_lineage(
-                            config.source.type, extractor.source_identifier(config.source), steps
-                        )
-                        final = lineage_mod.stamp_lineage(
-                            transformed, meta, config.pipeline_id, ctx.run_id
-                        )
+                            loader = self.loaders.get(config.sink.type)
+                            if loader is None:
+                                raise KeyError(
+                                    f"no loader registered for sink type '{config.sink.type}'"
+                                )
+                            with collector.phase("load"):
+                                result = loader.load(
+                                    final, with_resolved_credentials(config.sink), ctx.run_id
+                                )
+                        finally:
+                            # join the side actions on every path, so no thread
+                            # outlives the run; an error of theirs replaces one
+                            # raised above, as the reference's order would have it
+                            if pending:
+                                report = pending()
+                                metrics.records_failed = report.quarantined
 
-                        loader = self.loaders.get(config.sink.type)
-                        if loader is None:
-                            raise KeyError(
-                                f"no loader registered for sink type '{config.sink.type}'"
+                    metrics.records_loaded = result.records_written
+                    metrics.records_transformed = result.records_written
+                    # the observation rode the sink action — no extra job ran.
+                    # In the quality path it observes the valid branch, so the
+                    # quarantined rows are added back to get the extracted total.
+                    # Observation.get raises a JVM assertion when the observed
+                    # node's metrics never materialized — AQE can eliminate the
+                    # observed subtree entirely (seen: an EMPTY keyword-match
+                    # relation empty-propagated through a LEFT ANTI join whose
+                    # other side re-reads the source, leaving no executed task
+                    # containing the observe node). The pipeline's OUTPUT is
+                    # correct in that case; failing the run over a lost counter
+                    # would be wrong, so degrade to the documented -1 sentinel
+                    # (same contract as performance.skipExtractCount).
+                    if extract_obs is not None:
+                        try:
+                            metrics.records_extracted = (
+                                int(extract_obs.get["records_extracted"])
+                                + metrics.records_failed
                             )
-                        with collector.phase("load"):
-                            result = loader.load(
-                                final, with_resolved_credentials(config.sink), ctx.run_id
-                            )
-                    finally:
-                        # join the side actions on every path, so no thread
-                        # outlives the run; an error of theirs replaces one
-                        # raised above, as the reference's order would have it
-                        if pending:
-                            report = pending()
-                            metrics.records_failed = report.quarantined
-
-                metrics.records_loaded = result.records_written
-                metrics.records_transformed = result.records_written
-                # the observation rode the sink action — no extra job ran.
-                # In the quality path it observes the valid branch, so the
-                # quarantined rows are added back to get the extracted total.
-                # Observation.get raises a JVM assertion when the observed
-                # node's metrics never materialized — AQE can eliminate the
-                # observed subtree entirely (seen: an EMPTY keyword-match
-                # relation empty-propagated through a LEFT ANTI join whose
-                # other side re-reads the source, leaving no executed task
-                # containing the observe node). The pipeline's OUTPUT is
-                # correct in that case; failing the run over a lost counter
-                # would be wrong, so degrade to the documented -1 sentinel
-                # (same contract as performance.skipExtractCount).
-                if extract_obs is not None:
-                    try:
-                        metrics.records_extracted = (
-                            int(extract_obs.get["records_extracted"])
-                            + metrics.records_failed
-                        )
-                    except Exception:  # noqa: BLE001 — lost-observation fallback
+                        except Exception:  # noqa: BLE001 — lost-observation fallback
+                            metrics.records_extracted = -1
+                    else:
                         metrics.records_extracted = -1
-                else:
-                    metrics.records_extracted = -1
-                metrics.quality_report = report
-                collector.record("extract", metrics.records_extracted)
-                collector.record("load", metrics.records_loaded)
-                # incremental sources (file_incremental) stage their batch
-                # at extract time and only mark it processed HERE, after
-                # the sink action succeeded — a failed run re-discovers the
-                # same files next time (at-least-once)
-                commit = getattr(extractor, "commit_processed", None)
-                if commit is not None:
-                    commit(config.source)
-                metrics.status = "SUCCESS"
+                    metrics.quality_report = report
+                    # incremental sources (file_incremental) stage their batch
+                    # at extract time and only mark it processed HERE, after
+                    # the sink action succeeded — a failed run re-discovers the
+                    # same files next time (at-least-once)
+                    commit = getattr(extractor, "commit_processed", None)
+                    if commit is not None:
+                        commit(config.source)
+            collector.record("extract", metrics.records_extracted)
+            collector.record("load", metrics.records_loaded)
+            metrics.status = "SUCCESS"
         except Exception as e:  # noqa: BLE001 — failure contract returns metrics
             metrics.status = "FAILED"
             metrics.error_details = f"{type(e).__name__}: {e}"

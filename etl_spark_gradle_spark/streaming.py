@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from etl_spark_gradle_spark.operators.relational import _agg_column
+from etl_spark_gradle_spark.operators.relational import window_aggregate
 from etl_spark_gradle_spark.plans.config import AggregateExpr, ConfigError
 
 
@@ -113,28 +113,13 @@ def windowed_stream_agg(
     ``window_duration`` is the inactivity gap). The watermark lets Spark
     emit finalized windows (append mode) and evict their state — for
     session windows it is also what closes a session (last event + gap
-    behind the watermark)."""
-    if not aggregations:
-        raise ConfigError("streaming windowing requires at least one AggregateExpr")
-    wt = window_type.lower()
-    if wt not in ("tumbling", "sliding", "session"):
-        raise ConfigError(f"unsupported streaming windowType '{window_type}'")
-    if wt == "session":
-        win = F.session_window(F.col(time_column), window_duration)
-        alias = "session_window"
-    elif wt == "sliding" or slide_duration:
-        if not slide_duration:
-            raise ConfigError("sliding window requires slideDuration")
-        win = F.window(F.col(time_column), window_duration, slide_duration)
-        alias = "window"
-    else:
-        win = F.window(F.col(time_column), window_duration)
-        alias = "window"
-    keys = [win.alias(alias)] + [F.col(c) for c in (group_by or [])]
-    return (
-        df.withWatermark(time_column, watermark_delay)
-        .groupBy(*keys)
-        .agg(*[_agg_column(a) for a in aggregations])
+    behind the watermark). A ``slide_duration`` makes a tumbling window
+    sliding."""
+    if window_type.lower() == "tumbling" and slide_duration:
+        window_type = "sliding"
+    return window_aggregate(
+        df.withWatermark(time_column, watermark_delay), time_column, window_duration,
+        aggregations, window_type, slide_duration, group_by,
     )
 
 
@@ -566,15 +551,14 @@ def write_stream(
     return query
 
 
-def _flatten_window(agg: DataFrame, window_type: str) -> DataFrame:
-    """Project a :func:`windowed_stream_agg` result's window struct
-    (``window``, or ``session_window`` for session windows) to flat
-    ``window_start``/``window_end`` columns ahead of the other columns."""
-    win = "session_window" if window_type.lower() == "session" else "window"
+def _flatten_window(agg: DataFrame) -> DataFrame:
+    """Project a :func:`windowed_stream_agg` result's ``window`` struct to
+    flat ``window_start``/``window_end`` columns ahead of the other
+    columns."""
     return agg.select(
-        F.col(f"{win}.start").alias("window_start"),
-        F.col(f"{win}.end").alias("window_end"),
-        *[c for c in agg.columns if c != win],
+        F.col("window.start").alias("window_start"),
+        F.col("window.end").alias("window_end"),
+        *[c for c in agg.columns if c != "window"],
     )
 
 
@@ -611,110 +595,46 @@ def run_file_to_file_stream(
         group_by=group_by,
         window_type=window_type,
     )
-    sink = dict(sink_options)
-    sink.setdefault("trigger", "availableNow")
-    write_stream(
-        _flatten_window(agg, window_type), sink, output_mode="append",
-        await_termination=True,
-    )
+    write_stream(_flatten_window(agg), sink_options, await_termination=True)
 
 
-def run_streaming_pipeline(config, spark: SparkSession) -> StreamingQuery:
-    """Run a ``streaming: true`` pipeline YAML as real Structured
-    Streaming: ``readStream`` source → stateless transforms (filter/map
-    via the same registry operators) + streaming-aware stateful steps
-    (windowing with a mandatory watermark, bounded-state dedup) →
-    ``writeStream`` sink (availableNow by default — incremental,
-    exactly-once on file sinks, rerunnable on a schedule).
-
-    Source schema: streaming file sources require one; provide a Spark
-    StructType JSON via source ``schemaPath``, or it is inferred from a
-    one-off batch read of the same path (fine for file sources whose
-    layout is stable; pin schemaPath in production).
-
-    Returns the ``StreamingQuery``; with the default availableNow trigger
-    it has terminated, and its ``recentProgress`` holds the drain's
-    batches.
-    """
-    from etl_spark_gradle_spark.operators.relational import (
-        filter_rows,
-        map_columns,
-        parse_map_expressions,
-        _split_csv,
-    )
-
-    src = config.source
-    if src.type in ("file", "s3"):
-        if src.schema_path:
+def read_source_stream(source, spark: SparkSession) -> DataFrame:
+    """``readStream`` over a ``streaming: true`` pipeline's source. A file
+    source's schema comes from its ``schemaPath`` (StructType JSON), else
+    from a one-off batch read of the path: pin it in production."""
+    if source.type in ("file", "s3"):
+        if source.schema_path:
             import json as _json
 
-            with open(src.schema_path, encoding="utf-8") as f:
+            with open(source.schema_path, encoding="utf-8") as f:
                 schema = StructType.fromJson(_json.load(f))
         else:
             schema = (
-                spark.read.format(src.options.get("format", "json"))
+                spark.read.format(source.options.get("format", "json"))
                 .options(
-                    **{k: v for k, v in src.options.items() if k not in ("path", "format")}
+                    **{k: v for k, v in source.options.items() if k not in ("path", "format")}
                 )
-                .load(src.options["path"])
+                .load(source.options["path"])
                 .schema
             )
-        df = read_file_stream(spark, src.options, schema)
-    elif src.type == "kafka":
-        df = read_kafka_stream(spark, src.options)
-    else:
-        raise ConfigError(f"streaming mode supports file|s3|kafka sources, got '{src.type}'")
+        return read_file_stream(spark, source.options, schema)
+    if source.type == "kafka":
+        return read_kafka_stream(spark, source.options)
+    raise ConfigError(f"streaming mode supports file|s3|kafka sources, got '{source.type}'")
 
-    for t in config.transformations:
-        opts = t.options
-        if t.type == "filter":
-            df = filter_rows(df, opts["condition"])
-        elif t.type == "map":
-            df = map_columns(df, parse_map_expressions(opts["expressions"]))
-        elif t.type == "windowing":
-            df = windowed_stream_agg(
-                df,
-                time_column=opts.get("timeColumn") or opts["timestampColumn"],
-                window_duration=opts["windowDuration"],
-                aggregations=list(t.aggregations),
-                watermark_delay=opts.get("watermarkDelay", "10 minutes"),
-                slide_duration=opts.get("slideDuration"),
-                group_by=_split_csv(opts.get("groupBy")) or None,
-                window_type=opts.get("windowType", "tumbling"),
-            )
-            df = _flatten_window(df, opts.get("windowType", "tumbling"))
-        elif t.type == "dedup":
-            keys = _split_csv(opts.get("keys"))
-            if not keys:
-                raise ConfigError("streaming dedup requires 'keys'")
-            df = stream_dedup(
-                df,
-                keys,
-                time_column=opts.get("timeColumn"),
-                watermark_delay=opts.get("watermarkDelay", "10 minutes"),
-            )
-        elif t.type == "ewma":
-            for req in ("keyColumn", "timeColumn", "valueColumn", "alpha"):
-                if not opts.get(req):
-                    raise ConfigError(f"streaming ewma requires '{req}'")
-            df = ewma_stream(
-                df,
-                key_col=opts["keyColumn"],
-                time_col=opts["timeColumn"],
-                value_col=opts["valueColumn"],
-                alpha=float(opts["alpha"]),
-                tiebreak_col=opts.get("tiebreakColumn"),
-                watermark_delay=opts.get("watermarkDelay", "10 minutes"),
-                output_col=opts.get("outputColumn", "ewma"),
-            )
-        else:
-            raise ConfigError(
-                f"transformation '{t.type}' is not streamable — supported in "
-                "streaming mode: filter, map, windowing, dedup, ewma"
-            )
 
-    sink = dict(config.sink.options)
-    return write_stream(df, sink, output_mode="append", await_termination=True)
+def run_streaming_pipeline(config, spark: SparkSession) -> StreamingQuery:
+    """Start the plan ``PipelineExecutor.build_plan`` builds for a
+    ``streaming: true`` pipeline with :func:`write_stream`, without the
+    executor's conf scope or metrics. Returns the ``StreamingQuery``;
+    with the default availableNow trigger it has terminated."""
+    from etl_spark_gradle_spark.plans.config import RunContext, with_resolved_credentials
+    from etl_spark_gradle_spark.plans.executor import PipelineExecutor
+
+    ctx = RunContext.create(config.pipeline_id, spark)
+    plan = PipelineExecutor().build_plan(config, ctx)[1]
+    sink = with_resolved_credentials(config.sink).options
+    return write_stream(plan, sink, output_mode="append", await_termination=True)
 
 
 def stream_dedup_against_store(
@@ -877,9 +797,11 @@ def _fold_store(
             f"{store_path}/v={batch_id}"
         )
         if prev is not None:
+            # prune from the lookup's listing: the only version written
+            # since is batch_id, which is never below prev
             fs, _ = _hadoop_fs(spark, store_path)
             Path = spark._jvm.org.apache.hadoop.fs.Path
-            for v in _rollup_versions(spark, store_path):
+            for v in older:
                 if v < prev:
                     fs.delete(Path(f"{store_path}/v={v}"), True)
 

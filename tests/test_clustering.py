@@ -118,6 +118,20 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     assert got == py_kmeans(rows, k=2, iterations=3, f32=False)
 
 
+def test_kmeans_fewer_seed_rows_than_k(spark):
+    # 3 usable rows for k=5: the run has 3 clusters. Six iterations cross
+    # a _LLOYD_CHUNK boundary, where the centroid array is collected and
+    # rebuilt — it must hold 3 centroids, not 5 padded with NULLs.
+    rows = [(0, [0.0, 0.0]), (1, [1.0, 0.5]), (2, [0.25, 1.0])]
+    df = spark.createDataFrame(rows, "id long, vec array<double>")
+    for iterations in (3, 6):
+        got = {
+            r["id"]: (r["cluster"], r["dist_int"])
+            for r in kmeans(df, "id", "vec", k=5, iterations=iterations).collect()
+        }
+        assert got == py_kmeans(rows, k=5, iterations=iterations, f32=False)
+
+
 def test_kmeans_drops_null_and_ragged_rows(spark):
     df = spark.createDataFrame(
         [
