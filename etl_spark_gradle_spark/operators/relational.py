@@ -92,6 +92,16 @@ def _as_col(c):
 PIN_MAX_BYTES = 256 * 1024 * 1024
 
 
+def estimated_bytes(df: DataFrame) -> int | None:
+    """The optimizer's ``sizeInBytes`` estimate of ``df`` (no job runs;
+    parquet-derived plans carry file-size stats), or None when the
+    estimate fails."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # estimation failure must never break the plan
+        return None
+
+
 def pin_bounded(df: DataFrame, max_bytes: int | None = None) -> DataFrame:
     """Materialize a REUSED relation once, fault-tolerance-aware.
 
@@ -115,12 +125,7 @@ def pin_bounded(df: DataFrame, max_bytes: int | None = None) -> DataFrame:
     unknown size, so it persists too: cutting the lineage of a
     relation that may be huge is the riskier trade."""
     limit = PIN_MAX_BYTES if max_bytes is None else int(max_bytes)
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # estimation failure must never break the plan
-        est = None
+    est = estimated_bytes(df)
     if est is not None and est <= limit:
         return df.localCheckpoint(eager=False)
     from pyspark import StorageLevel
@@ -1763,6 +1768,11 @@ class WindowingTransformer(_BaseTransformer):
             errors.append("windowing requires 'windowDuration'")
         if wt == "sliding" and not opts.get("slideDuration"):
             errors.append("sliding window requires 'slideDuration'")
+        if wt == "tumbling" and opts.get("slideDuration"):
+            errors.append(
+                "a tumbling window does not slide: drop 'slideDuration' or write "
+                "'windowType: sliding'"
+            )
         if not config.aggregations:
             errors.append("windowing requires 'aggregations'")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_spark_gradle_spark.operators.relational import TransformationError
+from etl_spark_gradle_spark.operators.relational import TransformationError, estimated_bytes
 
 __all__ = ["edit_distance_join", "py_edit_distance"]
 
@@ -162,10 +162,17 @@ def edit_distance_join(
     # (k+1) rows per string vs the probe side's up to (2k+1)²·(k+1)
     # (25x at k=2); without the hint the planner's post-explode size
     # estimates picked the PROBE side as build (a ~1.5M-row broadcast
-    # at sf0.1 where the index is ~60k rows)
+    # at sf0.1 where the index is ~60k rows). The hint stays under the
+    # session's broadcast threshold: past it (or with no estimate) the
+    # planner's shuffle join keeps an unbounded index off the driver.
+    index = _index_rows(idx_src)
+    est = estimated_bytes(index)
+    limit = index.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if est is not None and est < limit:
+        index = F.broadcast(index)
     candidates = (
         _probe_rows(probe_src)
-        .join(F.broadcast(_index_rows(idx_src)), on=["seg", "i", "l"])
+        .join(index, on=["seg", "i", "l"])
         .select("_probe_s", "_idx_s")
         .distinct()
     )

@@ -9,7 +9,12 @@ overridable per pipeline (``PerformanceConfig``) and per call.
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import subprocess
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -121,6 +126,180 @@ def _default_driver_memory() -> str:
 _DEFAULTS["spark.driver.memory"] = _default_driver_memory()
 
 
+# Class-data sharing (JDK dynamic CDS archive) for the local JVM. The
+# first process to find no archive records the classes it loaded into
+# ``<key>.jsa.<pid>.tmp`` at JVM exit (~10 s); an atexit hook publishes it
+# as ``<key>.jsa`` once the JVM has exited cleanly and a probe JVM maps it.
+# Every later process maps the archive and skips class parsing and
+# verification: on a 4-vCPU VM, pipebench's quality_ingest setup_s went
+# from a median 14.2 s to 7.4 s (10 interleaved pairs). The cache lives
+# outside TMPDIR and java.io.tmpdir, which callers point at run-scoped
+# dirs. SPARK_GRAFT_CDS=0 leaves the JVM arguments as they are without it.
+_CDS_LOGS_OFF = "-Xlog:cds*=off"  # the JVM logs CDS warnings to stdout
+_CDS_DUMP_WAIT_S = 120
+# launcher inputs that add class path entries (possibly non-empty
+# directories, which JDK 17 refuses to archive) the key cannot see
+_CLASSPATH_ENV = (
+    "SPARK_CLASSPATH", "SPARK_DIST_CLASSPATH", "SPARK_PREPEND_CLASSES",
+    "HADOOP_CONF_DIR", "YARN_CONF_DIR",
+)
+
+
+def _java() -> str | None:
+    """The java binary ``bin/spark-class`` runs."""
+    java_home = os.environ.get("JAVA_HOME")
+    return os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+
+
+class _ClassDataSharing:
+    """One JVM launch's CDS plan: map ``archive`` when it exists, else
+    record it (at most one process per key at a time, by file lock)."""
+
+    def __init__(self, java: str, archive: Path, conf_dir: str | None, xmx: str):
+        self.java, self.archive, self.conf_dir, self.xmx = java, archive, conf_dir, xmx
+        self.tmp: Path | None = None
+        self.lock = None
+
+    @classmethod
+    def plan(cls, conf: dict[str, str]) -> "_ClassDataSharing | None":
+        """None when CDS stays off: opted out, an unknown JDK, a conf dir
+        with real files, or class path inputs the key does not cover."""
+        if os.environ.get("SPARK_GRAFT_CDS") == "0":
+            return None
+        if any(os.environ.get(name) for name in _CLASSPATH_ENV):
+            return None
+        from pyspark import __version__ as spark_version
+        from pyspark.find_spark_home import _find_spark_home
+
+        java = _java()
+        if not java or not os.path.exists(java):
+            return None
+        release = Path(os.path.realpath(java)).parents[1] / "release"
+        try:
+            jdk = dict(
+                line.split("=", 1) for line in release.read_text().splitlines() if "=" in line
+            )["JAVA_RUNTIME_VERSION"].strip('"')
+            if int(jdk.split(".")[0].split("+")[0]) < 17:
+                return None
+            spark_home = Path(_find_spark_home())
+            jars = sorted((e.name, e.stat().st_size) for e in os.scandir(spark_home / "jars"))
+        except (OSError, KeyError, ValueError):
+            return None
+        cache = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache")
+        cache = cache / "etl_spark_gradle_spark" / "cds"
+        # the launcher puts the conf dir first on the class path; a real
+        # file there must stay visible, and only an empty dir can be archived
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or str(spark_home / "conf")
+        try:
+            entries = os.listdir(conf_dir)
+        except OSError:
+            entries = []
+        if any(not name.endswith(".template") for name in entries):
+            return None
+        launch_conf = str(cache / "empty-conf") if entries else None
+        try:
+            cache.mkdir(parents=True, exist_ok=True)
+            if launch_conf:
+                os.makedirs(launch_conf, exist_ok=True)
+                if os.listdir(launch_conf):
+                    return None
+        except OSError:
+            return None
+        material = repr((
+            jdk, os.path.realpath(java), spark_version, launch_conf or conf_dir,
+            conf.get("spark.driver.extraClassPath"),
+            os.environ.get("PYSPARK_SUBMIT_ARGS"), jars,
+        ))
+        key = f"spark-{spark_version}-jdk-{jdk}-{hashlib.sha256(material.encode()).hexdigest()[:16]}"
+        return cls(java, cache / f"{key}.jsa", launch_conf, conf["spark.driver.memory"])
+
+    def java_options(self) -> str:
+        """The flags for this launch; "" when another process is recording
+        the archive right now."""
+        if self.archive.exists():
+            return f"{_CDS_LOGS_OFF} -XX:SharedArchiveFile={self.archive}"
+        import fcntl
+
+        try:
+            lock = open(self.archive.with_suffix(".lock"), "a")
+        except OSError:
+            return ""
+        try:
+            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except OSError:
+            lock.close()
+            return ""
+        if self.archive.exists():  # published while we took the lock
+            lock.close()
+            return self.java_options()
+        # holding the lock, every temp file left is from a dead recorder
+        for stale in self.archive.parent.glob(f"{self.archive.name}.*.tmp"):
+            stale.unlink(missing_ok=True)
+        self.lock = lock
+        self.tmp = self.archive.with_name(f"{self.archive.name}.{os.getpid()}.tmp")
+        return f"{_CDS_LOGS_OFF} -XX:ArchiveClassesAtExit={self.tmp}"
+
+    def launch(self, builder) -> SparkSession:
+        from pyspark import SparkContext
+
+        saved = os.environ.get("SPARK_CONF_DIR")
+        if self.conf_dir:
+            os.environ["SPARK_CONF_DIR"] = self.conf_dir
+        classpath = None
+        try:
+            spark = builder.getOrCreate()
+            if self.tmp:
+                classpath = spark.sparkContext._jvm.java.lang.System.getProperty(
+                    "java.class.path"
+                )
+            return spark
+        finally:
+            if saved is None:
+                os.environ.pop("SPARK_CONF_DIR", None)
+            else:
+                os.environ["SPARK_CONF_DIR"] = saved
+            if self.tmp:
+                atexit.register(self._publish, SparkContext._gateway, classpath)
+
+    def _publish(self, gateway, classpath: str | None) -> None:
+        """Close the gateway, wait for the JVM to write the archive, and
+        publish it only if a probe JVM maps it: a truncated archive
+        crashes every JVM that maps it (SIGBUS)."""
+        try:
+            proc = gateway.proc if gateway is not None else None
+            if proc is None:
+                return
+            try:
+                gateway.shutdown()
+            except Exception:  # noqa: BLE001 — already shut down
+                pass
+            proc.stdin.close()
+            try:
+                proc.wait(timeout=_CDS_DUMP_WAIT_S)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+            if proc.returncode == 0 and classpath and self.tmp.exists() and self._maps(classpath):
+                os.replace(self.tmp, self.archive)
+        finally:
+            self.tmp.unlink(missing_ok=True)
+            self.lock.close()
+
+    def _maps(self, classpath: str) -> bool:
+        probe = [
+            self.java, "-cp", classpath, f"-Xmx{self.xmx}", "-Xshare:on",
+            f"-XX:SharedArchiveFile={self.tmp}", "-XX:ErrorFile=/dev/null",
+            "-XX:-CreateCoredumpOnCrash", "-version",
+        ]
+        try:
+            return subprocess.run(
+                probe, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+                cwd=self.archive.parent, timeout=60,
+            ).returncode == 0
+        except (OSError, subprocess.TimeoutExpired):
+            return False
+
+
 def get_spark(
     app_name: str = "etl-spark-gradle-spark",
     master: str | None = None,
@@ -131,8 +310,12 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
     ``local[*]``) so tests and bench share one entry point; on a real
     cluster pass ``master=None`` with an external cluster manager config
-    or set it explicitly.
+    or set it explicitly. When this call launches the JVM, it starts it
+    from the class-data-sharing archive (see ``_ClassDataSharing``),
+    unless ``conf`` sets ``spark.driver.defaultJavaOptions``.
     """
+    from pyspark import SparkContext
+
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -140,6 +323,15 @@ def get_spark(
     merged = dict(_DEFAULTS)
     if conf:
         merged.update(conf)
+    cds = None
+    launches_jvm = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    if launches_jvm and "spark.driver.defaultJavaOptions" not in (conf or {}):
+        cds = _ClassDataSharing.plan(merged)
+        options = cds.java_options() if cds else ""
+        if options:
+            merged["spark.driver.defaultJavaOptions"] += " " + options
+        else:
+            cds = None
     for k, v in merged.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return cds.launch(builder) if cds else builder.getOrCreate()

@@ -113,10 +113,7 @@ def windowed_stream_agg(
     ``window_duration`` is the inactivity gap). The watermark lets Spark
     emit finalized windows (append mode) and evict their state — for
     session windows it is also what closes a session (last event + gap
-    behind the watermark). A ``slide_duration`` makes a tumbling window
-    sliding."""
-    if window_type.lower() == "tumbling" and slide_duration:
-        window_type = "sliding"
+    behind the watermark)."""
     return window_aggregate(
         df.withWatermark(time_column, watermark_delay), time_column, window_duration,
         aggregations, window_type, slide_duration, group_by,

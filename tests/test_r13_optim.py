@@ -225,8 +225,11 @@ def test_build_cms_pre_aggregate_rejects_weight_col(spark):
 def test_edit_join_plan_single_index_scan_and_broadcast(spark):
     from etl_spark_gradle_spark.operators.strings import edit_distance_join
 
-    df = spark.createDataFrame(
-        [("kettle",), ("kettles",), ("cat",), ("",), ("ab",)], "s string"
+    # a VALUES relation carries a size estimate; an RDD-backed frame
+    # (createDataFrame) has none, and the index side of a frame of unknown
+    # size is not broadcast
+    df = spark.sql(
+        "SELECT * FROM VALUES ('kettle'), ('kettles'), ('cat'), (''), ('ab') AS t(s)"
     )
     out = edit_distance_join(df, "s", max_distance=2)
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -154,6 +154,20 @@ def test_streaming_steps_are_validated(spark, tmp_path):
     assert "timeColumn not in input schema: when" in metrics.error_details
 
 
+@pytest.mark.parametrize("streaming", [True, False])
+def test_tumbling_window_with_a_slide_is_rejected(spark, tmp_path, streaming):
+    """``windowType: tumbling`` with a ``slideDuration`` fails validate in
+    both modes: a stream used to slide such a window while a batch run
+    ignored the slide. The error names the key and the spelling to use."""
+    options = {**WINDOWING["options"], "slideDuration": "30 seconds"}
+    doc = _stream_doc(tmp_path, [{**WINDOWING, "options": options}], streaming=streaming)
+    _events(tmp_path / "src" / "a.json")
+    metrics = PipelineExecutor().execute(parse_pipeline_dict(doc), spark)
+    assert metrics.status == "FAILED"
+    assert "'slideDuration'" in metrics.error_details
+    assert "'windowType: sliding'" in metrics.error_details
+
+
 def test_streaming_uses_registry_override(spark, tmp_path):
     """The executor's registry decides what runs in streaming mode too."""
     from etl_spark_gradle_spark.operators import TRANSFORMER_REGISTRY

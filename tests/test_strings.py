@@ -75,6 +75,29 @@ def test_edit_join_no_cartesian_in_plan(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_edit_join_broadcast_respects_threshold(spark, sf_dir):
+    """The index side is broadcast only under the session's
+    autoBroadcastJoinThreshold; past it the join shuffles and the pairs
+    stay the same."""
+    pa = spark.read.parquet(f"{sf_dir}/part.parquet")
+
+    def pairs():
+        out = sj.edit_distance_join(pa, "p_name", max_distance=2)
+        got = {(r.s_a, r.s_b): r.edit_distance for r in out.collect()}
+        return got, out._jdf.queryExecution().executedPlan().toString()
+
+    want, plan = pairs()
+    assert "BroadcastExchange" in plan
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    try:
+        got, plan = pairs()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastExchange" not in plan
+    assert got == want and want
+
+
 def test_edit_join_validation(spark):
     df = spark.createDataFrame([("a",)], ["s"])
     with pytest.raises(TransformationError, match="max_distance"):
