@@ -134,7 +134,7 @@ _DEFAULTS["spark.driver.memory"] = _default_driver_memory()
 # verification: on a 4-vCPU VM, pipebench's quality_ingest setup_s went
 # from a median 14.2 s to 7.4 s (10 interleaved pairs). The cache lives
 # outside TMPDIR and java.io.tmpdir, which callers point at run-scoped
-# dirs. SPARK_GRAFT_CDS=0 leaves the JVM arguments as they are without it.
+# dirs. A caller's own spark.driver.defaultJavaOptions keeps CDS off.
 _CDS_LOGS_OFF = "-Xlog:cds*=off"  # the JVM logs CDS warnings to stdout
 _CDS_DUMP_WAIT_S = 120
 # launcher inputs that add class path entries (possibly non-empty
@@ -162,10 +162,8 @@ class _ClassDataSharing:
 
     @classmethod
     def plan(cls, conf: dict[str, str]) -> "_ClassDataSharing | None":
-        """None when CDS stays off: opted out, an unknown JDK, a conf dir
-        with real files, or class path inputs the key does not cover."""
-        if os.environ.get("SPARK_GRAFT_CDS") == "0":
-            return None
+        """None when CDS stays off: an unknown JDK, a conf dir with real
+        files, or class path inputs the key does not cover."""
         if any(os.environ.get(name) for name in _CLASSPATH_ENV):
             return None
         from pyspark import __version__ as spark_version
@@ -235,9 +233,31 @@ class _ClassDataSharing:
         # holding the lock, every temp file left is from a dead recorder
         for stale in self.archive.parent.glob(f"{self.archive.name}.*.tmp"):
             stale.unlink(missing_ok=True)
+        self._prune_other_keys()
         self.lock = lock
         self.tmp = self.archive.with_name(f"{self.archive.name}.{os.getpid()}.tmp")
         return f"{_CDS_LOGS_OFF} -XX:ArchiveClassesAtExit={self.tmp}"
+
+    def _prune_other_keys(self) -> None:
+        """Delete the archives of other keys (an older JDK or Spark, another
+        class path), ~150 MB each, unless a process is recording one now.
+        A JVM that maps a deleted archive keeps its pages."""
+        import fcntl
+
+        cache = self.archive.parent
+        keys = {p.stem for p in cache.glob("*.jsa")} | {p.stem for p in cache.glob("*.lock")}
+        keys.discard(self.archive.stem)
+        for key in keys:
+            lock_path = cache / f"{key}.lock"
+            try:
+                with open(lock_path, "a") as lock:
+                    fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    for stale in cache.glob(f"{key}.jsa.*.tmp"):
+                        stale.unlink(missing_ok=True)
+                    (cache / f"{key}.jsa").unlink(missing_ok=True)
+                    lock_path.unlink()
+            except OSError:
+                continue
 
     def launch(self, builder) -> SparkSession:
         from pyspark import SparkContext

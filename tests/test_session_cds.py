@@ -2,10 +2,12 @@
 
 Every JVM here starts in a subprocess against its own cache dir
 (``XDG_CACHE_HOME``), so the archive state each case sees is its own.
+The rules that only pick a plan run in-process and start no JVM.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import subprocess
@@ -31,30 +33,33 @@ print(json.dumps({
 }))
 """
 
-CDS_FLAGS = ("-Xlog:cds", "-XX:SharedArchiveFile", "-XX:ArchiveClassesAtExit")
-
-
-def _env(cache: Path, **extra) -> dict:
+def _env(cache: Path) -> dict:
     env = {k: v for k, v in os.environ.items() if k != "SPARK_CONF_DIR"}
-    env.update(XDG_CACHE_HOME=str(cache), **extra)
+    env.update(XDG_CACHE_HOME=str(cache))
     return env
 
 
-def _session(cache: Path, conf: dict | None = None, **extra) -> dict:
+def _session(cache: Path, conf: dict | None = None) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", SESSION, json.dumps(conf or {})], cwd=REPO,
-        env=_env(cache, **extra), capture_output=True, text=True, timeout=600,
+        env=_env(cache), capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def _archive(cache: Path) -> Path:
+def _plan(cache: Path, conf_dir: Path | None = None):
     from etl_spark_gradle_spark.session import _DEFAULTS, _ClassDataSharing
 
     with mock.patch.dict(os.environ, {"XDG_CACHE_HOME": str(cache)}):
         os.environ.pop("SPARK_CONF_DIR", None)
-        plan = _ClassDataSharing.plan(dict(_DEFAULTS))
+        if conf_dir is not None:
+            os.environ["SPARK_CONF_DIR"] = str(conf_dir)
+        return _ClassDataSharing.plan(dict(_DEFAULTS))
+
+
+def _archive(cache: Path) -> Path:
+    plan = _plan(cache)
     assert plan is not None, "CDS is off in this environment"
     return plan.archive
 
@@ -103,6 +108,15 @@ def recorded(tmp_path_factory, sf_dir):
     dead = subprocess.Popen(["true"])
     dead.wait()
     (archive.parent / f"{archive.name}.{dead.pid}.tmp").write_bytes(truncated)
+    # archives of other keys: one nobody records (pruned), one whose
+    # recorder holds its lock (kept)
+    cds = archive.parent
+    for key in ("spark-0-jdk-0-old", "spark-0-jdk-0-busy"):
+        (cds / f"{key}.jsa").write_bytes(b"old")
+        (cds / f"{key}.jsa.{dead.pid}.tmp").write_bytes(b"old")
+    (cds / "spark-0-jdk-0-old.lock").touch()
+    busy = open(cds / "spark-0-jdk-0-busy.lock", "a")
+    fcntl.flock(busy, fcntl.LOCK_EX)
 
     pipeline = root / "pipeline.yaml"
     pipeline.write_text(
@@ -114,7 +128,16 @@ def recorded(tmp_path_factory, sf_dir):
         f"sink: {{type: file, options: {{path: {root / 'out'}, format: parquet}}, "
         "writeMode: overwrite}\n"
     )
-    first = _cli(cache, pipeline)
+    try:
+        first = _cli(cache, pipeline)
+    finally:
+        busy.close()
+    assert sorted(p.name for p in cds.glob("spark-0-*")) == [
+        "spark-0-jdk-0-busy.jsa", f"spark-0-jdk-0-busy.jsa.{dead.pid}.tmp",
+        "spark-0-jdk-0-busy.lock",
+    ]
+    for leftover in cds.glob("spark-0-*"):
+        leftover.unlink()
     return cache, archive, pipeline, first, len(truncated)
 
 
@@ -124,6 +147,7 @@ def test_cli_stdout_stays_json_when_recording_and_mapping(recorded):
     assert '"pipeline finished"' in first.stderr and '"SUCCESS"' in first.stderr
     # the recording process waited for its JVM and published one archive
     assert _cache_files(cache) == [archive.name]
+    assert [p.name for p in cache.rglob("*.lock")] == [f"{archive.stem}.lock"]
     second = _cli(cache, pipeline)
     _assert_json_lines(second.stdout)
     assert _cache_files(cache) == [archive.name]
@@ -156,20 +180,41 @@ def test_garbage_at_the_published_name_still_starts(tmp_path):
     assert f"-XX:SharedArchiveFile={archive}" in out["args"]
 
 
-def test_opt_out_leaves_jvm_arguments_unchanged(tmp_path):
-    from etl_spark_gradle_spark.session import _DEFAULTS
+def test_own_default_java_options_keep_cds_off(monkeypatch):
+    """A caller's ``spark.driver.defaultJavaOptions`` is the launch's whole
+    default option string: no CDS plan is made and nothing is appended."""
+    from pyspark import SparkContext
 
-    cache = tmp_path / "cache"
-    out = _session(cache, SPARK_GRAFT_CDS="0")
-    ours = [a for a in out["args"] if a.startswith(("-XX:Tier4",) + CDS_FLAGS)]
-    assert ours == _DEFAULTS["spark.driver.defaultJavaOptions"].split()
-    assert not cache.exists()
+    from etl_spark_gradle_spark import session
+
+    builder = mock.MagicMock()
+    builder.appName.return_value = builder.master.return_value = builder
+    builder.config.return_value = builder
+    monkeypatch.setattr(session, "SparkSession", mock.Mock(builder=builder))
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    plan = mock.Mock(return_value=None)
+    monkeypatch.setattr(session._ClassDataSharing, "plan", plan)
+
+    own = session._DEFAULTS["spark.driver.defaultJavaOptions"]
+    session.get_spark(conf={"spark.driver.defaultJavaOptions": own})
+    assert plan.call_count == 0
+    options = [c.args[1] for c in builder.config.call_args_list
+               if c.args[0] == "spark.driver.defaultJavaOptions"]
+    assert options == [own]
+    session.get_spark()  # the same launch without the caller's options plans CDS
+    assert plan.call_count == 1
 
 
-def test_real_conf_dir_turns_cds_off_and_its_conf_applies(tmp_path):
+def test_conf_dir_rule(tmp_path):
+    """A templates-only conf dir is swapped for an empty one; a real file
+    there turns CDS off before the cache is touched, and the launch then
+    keeps ``SPARK_CONF_DIR`` as it is, so that file's conf applies."""
     conf_dir = tmp_path / "conf"
     conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf.template").write_text("")
+    plan = _plan(tmp_path / "templates", conf_dir)
+    assert plan is not None and Path(plan.conf_dir) == plan.archive.parent / "empty-conf"
     (conf_dir / "spark-defaults.conf").write_text("spark.graft.cdsProbe  applied\n")
-    out = _session(tmp_path / "cache", SPARK_CONF_DIR=str(conf_dir))
-    assert out["conf"].get("spark.graft.cdsProbe") == "applied"
-    assert not [a for a in out["args"] if a.startswith(CDS_FLAGS)], out["args"]
+    assert _plan(tmp_path / "real", conf_dir) is None
+    assert not (tmp_path / "real").exists()
