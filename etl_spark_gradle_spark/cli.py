@@ -5,7 +5,9 @@
 
 Exit code 1 on pipeline failure (``Main.scala:153-155``); structured
 JSON log lines with pipeline/run correlation ids
-(``logging/StructuredLogger.scala:71-95``).
+(``logging/StructuredLogger.scala:71-95``) on stdout, one JSON object a
+line (Spark's own log lines go to stderr). A session this call started
+is stopped before it returns, and its JVM has exited.
 """
 
 from __future__ import annotations
@@ -28,9 +30,10 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument(
         "--explain",
         action="store_true",
-        help="dry run: build the full plan, print the formatted physical "
-        "explain and the resolved lineage chain, execute nothing (no sink "
-        "write, no extract job beyond schema resolution)",
+        help="dry run: build the full plan, log the resolved lineage chain "
+        "and the formatted physical plan (the last line's 'plan' field), "
+        "execute nothing (no sink write, no extract job beyond schema "
+        "resolution)",
     )
     args = parser.parse_args(argv)
 
@@ -41,45 +44,63 @@ def main(argv: list[str] | None = None) -> int:
             parser.error(f"--conf must be K=V, got {entry!r}")
         conf[key] = value
 
-    from etl_spark_gradle_spark.observability import MetricsCollector, StructuredLogger
-    from etl_spark_gradle_spark.plans import PipelineExecutor, load_pipeline_yaml
-    from etl_spark_gradle_spark.session import get_spark
+    from etl_spark_gradle_spark import session
+    from etl_spark_gradle_spark.observability import StructuredLogger
+    from etl_spark_gradle_spark.plans import load_pipeline_yaml
 
     try:
         config = load_pipeline_yaml(args.pipeline)
     except FileNotFoundError:
-        StructuredLogger(pipeline_id="<unparsed>").error(
+        StructuredLogger(sys.stdout, pipeline_id="<unparsed>").error(
             "pipeline YAML not found", path=args.pipeline, status="FAILED"
         )
         return 1
     except Exception as e:  # noqa: BLE001 — config-parse errors exit cleanly
-        StructuredLogger(pipeline_id="<unparsed>").error(
+        StructuredLogger(sys.stdout, pipeline_id="<unparsed>").error(
             "pipeline YAML invalid", path=args.pipeline, status="FAILED",
             error=f"{type(e).__name__}: {e}",
         )
         return 1
-    logger = StructuredLogger(pipeline_id=config.pipeline_id)
+    logger = StructuredLogger(sys.stdout, pipeline_id=config.pipeline_id)
     logger.info("pipeline parsed")
-    spark = get_spark(app_name=config.pipeline_id, master=args.master, conf=conf)
+    launched = session.launches_jvm()
+    spark = session.get_spark(app_name=config.pipeline_id, master=args.master, conf=conf)
+    try:
+        return _explain(config, spark, logger) if args.explain else _run(config, spark, logger)
+    finally:
+        # a session that was already up (an embedding process) stays up
+        if launched:
+            session.stop_spark(spark)
 
-    if args.explain:
-        # plan-review mode: the exact pre-sink plan the run would
-        # execute — pushed filters, ReadSchema pruning, exchanges, and
-        # broadcasts are all visible BEFORE paying for the job
-        from etl_spark_gradle_spark.plans.config import RunContext
 
-        try:
-            ctx = RunContext.create(config.pipeline_id, spark)
-            _, transformed, steps, _, _ = PipelineExecutor().build_plan(config, ctx)
-            logger.info("lineage chain", steps=steps)
+def _explain(config, spark, logger) -> int:
+    """Plan-review mode: the exact pre-sink plan the run would execute —
+    pushed filters, ReadSchema pruning, exchanges and broadcasts are all
+    visible before paying for the job. The formatted plan rides the last
+    log line's ``plan`` field."""
+    import contextlib
+    import io
+
+    from etl_spark_gradle_spark.plans import PipelineExecutor
+    from etl_spark_gradle_spark.plans.config import RunContext
+
+    try:
+        ctx = RunContext.create(config.pipeline_id, spark)
+        _, transformed, steps, _, _ = PipelineExecutor().build_plan(config, ctx)
+        logger.info("lineage chain", steps=steps)
+        plan = io.StringIO()
+        with contextlib.redirect_stdout(plan):
             transformed.explain("formatted")
-            logger.info("explain complete", status="SUCCESS")
-            return 0
-        except Exception as e:  # noqa: BLE001 — dry-run errors exit cleanly
-            logger.error(
-                "explain failed", status="FAILED", error=f"{type(e).__name__}: {e}"
-            )
-            return 1
+        logger.info("explain complete", status="SUCCESS", plan=plan.getvalue())
+        return 0
+    except Exception as e:  # noqa: BLE001 — dry-run errors exit cleanly
+        logger.error("explain failed", status="FAILED", error=f"{type(e).__name__}: {e}")
+        return 1
+
+
+def _run(config, spark, logger) -> int:
+    from etl_spark_gradle_spark.observability import MetricsCollector
+    from etl_spark_gradle_spark.plans import PipelineExecutor
 
     collector = MetricsCollector()
     metrics = PipelineExecutor().execute(config, spark, collector=collector)

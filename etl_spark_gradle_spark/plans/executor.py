@@ -34,6 +34,12 @@ Deliberate divergences for scale (SURVEY §4 anti-patterns):
 - ``streaming: true`` (an extension) builds its plan in ``build_plan``
   too, from a ``readStream`` source, with only the transformers that
   declare ``streamable``. Its output carries no ``_lineage`` column.
+- A batch run into a file sink spreads an under-split source over the
+  cores before its transformations (a parquet source under one row
+  group's size arrives as one split carrying rows, and its sink write
+  would encode every row in one task), unless the pipeline sets
+  ``performance.repartition`` or the sink fixes its file count. The
+  quality gate's side actions read the unsplit source.
 - ``shufflePartitions`` is applied for the run (batch and streaming) and
   restored afterwards instead of leaking into later pipelines on a
   shared session.
@@ -118,6 +124,28 @@ def row_hash_duplicate_stats(df: DataFrame) -> dict[str, int]:
     return {"total": total, "distinct": distinct, "duplicates": total - distinct}
 
 
+def _source_conf(config: PipelineConfig) -> dict[str, str]:
+    """Session conf the run's sources need for the whole run: a parquet
+    source or view with ``nanosAsLong`` sets a session-wide key, which
+    the run's ``session_conf`` scope then restores."""
+    from etl_spark_gradle_spark.sources.extractors import NANOS_AS_LONG, reads_nanos_as_long
+
+    sources = [config.source, *(source for _, source in config.views)]
+    if any(reads_nanos_as_long(source.options) for source in sources):
+        return {NANOS_AS_LONG: "true"}
+    return {}
+
+
+def _spreads_output(config: PipelineConfig) -> bool:
+    """A file sink whose output file count the pipeline leaves to Spark:
+    the sink write then runs one task per source split, and an
+    under-split source is spread over the cores first."""
+    sink = config.sink
+    return sink.type in ("file", "s3") and not (
+        sink.options.get("coalesce") or sink.options.get("targetFileSizeMB")
+    )
+
+
 class PipelineExecutor:
     """Drives one ``PipelineConfig`` to completion.
 
@@ -154,6 +182,13 @@ class PipelineExecutor:
         no separate counting job. A streaming plan reads a ``readStream``
         and has no ``extract_obs``; its steps pick their streaming form
         from ``df.isStreaming``.
+
+        Without ``performance.repartition``, a batch plan into a file sink
+        (``_spreads_output``) repartitions its source round-robin to
+        ``defaultParallelism`` when the source scan has fewer splits that
+        carry rows (``operators.dedup._ensure_parallelism``): a parquet
+        file under one row group's size is read, and its output encoded,
+        by one task.
         """
         if input_df is not None:
             df = input_df
@@ -195,6 +230,10 @@ class PipelineExecutor:
 
         if config.performance.repartition:
             df = df.repartition(config.performance.repartition)
+        elif not config.streaming and _spreads_output(config):
+            from etl_spark_gradle_spark.operators.dedup import _ensure_parallelism
+
+            df = _ensure_parallelism(df, probe=False)
 
         if config.performance.skip_extract_count or config.streaming:
             # no CollectMetrics barrier: downstream filters push all the
@@ -282,7 +321,7 @@ class PipelineExecutor:
         partitions = config.performance.shuffle_partitions or min(
             int(spark.conf.get(SHUFFLE_PARTITIONS)), spark.sparkContext.defaultParallelism
         )
-        settings = {SHUFFLE_PARTITIONS: partitions}
+        settings = {SHUFFLE_PARTITIONS: partitions, **_source_conf(config)}
         if streaming.local_checkpoint(spark, sink):
             settings[streaming.CHECKPOINT_FILE_MANAGER] = streaming.FILE_SYSTEM_CHECKPOINTS
         if streaming.is_drain(sink):
@@ -339,7 +378,8 @@ class PipelineExecutor:
                 self._drain(config, ctx, collector, metrics)
             else:
                 partitions = config.performance.shuffle_partitions
-                with session_conf(spark, {SHUFFLE_PARTITIONS: partitions}):
+                settings = {SHUFFLE_PARTITIONS: partitions, **_source_conf(config)}
+                with session_conf(spark, settings):
                     extractor = self.extractors.get(config.source.type)
                     if extractor is None:
                         raise KeyError(

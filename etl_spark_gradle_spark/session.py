@@ -136,13 +136,58 @@ _DEFAULTS["spark.driver.memory"] = _default_driver_memory()
 # outside TMPDIR and java.io.tmpdir, which callers point at run-scoped
 # dirs. A caller's own spark.driver.defaultJavaOptions keeps CDS off.
 _CDS_LOGS_OFF = "-Xlog:cds*=off"  # the JVM logs CDS warnings to stdout
-_CDS_DUMP_WAIT_S = 120
+# a recording JVM writes its archive (~10 s, more under load) on its way out
+_JVM_EXIT_WAIT_S = 120
 # launcher inputs that add class path entries (possibly non-empty
 # directories, which JDK 17 refuses to archive) the key cannot see
 _CLASSPATH_ENV = (
     "SPARK_CLASSPATH", "SPARK_DIST_CLASSPATH", "SPARK_PREPEND_CLASSES",
     "HADOOP_CONF_DIR", "YARN_CONF_DIR",
 )
+
+
+def launches_jvm() -> bool:
+    """True when building a session in this process starts its own local
+    JVM: no gateway yet, and none handed over by ``spark-submit``."""
+    from pyspark import SparkContext
+
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
+def _await_jvm_exit(gateway) -> int | None:
+    """Close ``gateway`` and wait up to ``_JVM_EXIT_WAIT_S`` for the JVM
+    this process launched behind it to exit (EOF on its stdin ends it),
+    killing it past that. Returns its exit code, None when there is no
+    such JVM. Safe to call again once the JVM is gone."""
+    proc = getattr(gateway, "proc", None)
+    if proc is None:
+        return None
+    try:
+        gateway.shutdown()
+    except Exception:  # noqa: BLE001 — already shut down
+        pass
+    proc.stdin.close()
+    try:
+        proc.wait(timeout=_JVM_EXIT_WAIT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    return proc.returncode
+
+
+def stop_spark(spark: SparkSession) -> None:
+    """Stop ``spark`` and wait (bounded) for the JVM this process launched
+    behind it to exit, so the JVM does not outlive the process; a later
+    ``get_spark`` launches a new one."""
+    from pyspark import SparkContext
+
+    gateway = spark.sparkContext._gateway
+    try:
+        spark.stop()
+    finally:
+        _await_jvm_exit(gateway)
+        if SparkContext._gateway is gateway:
+            SparkContext._gateway = SparkContext._jvm = None
 
 
 def _java() -> str | None:
@@ -286,20 +331,10 @@ class _ClassDataSharing:
         publish it only if a probe JVM maps it: a truncated archive
         crashes every JVM that maps it (SIGBUS)."""
         try:
-            proc = gateway.proc if gateway is not None else None
-            if proc is None:
-                return
-            try:
-                gateway.shutdown()
-            except Exception:  # noqa: BLE001 — already shut down
-                pass
-            proc.stdin.close()
-            try:
-                proc.wait(timeout=_CDS_DUMP_WAIT_S)
-            except subprocess.TimeoutExpired:
-                proc.kill()
-                proc.wait()
-            if proc.returncode == 0 and classpath and self.tmp.exists() and self._maps(classpath):
+            if (
+                _await_jvm_exit(gateway) == 0 and classpath
+                and self.tmp.exists() and self._maps(classpath)
+            ):
                 os.replace(self.tmp, self.archive)
         finally:
             self.tmp.unlink(missing_ok=True)
@@ -334,8 +369,6 @@ def get_spark(
     from the class-data-sharing archive (see ``_ClassDataSharing``),
     unless ``conf`` sets ``spark.driver.defaultJavaOptions``.
     """
-    from pyspark import SparkContext
-
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -344,8 +377,7 @@ def get_spark(
     if conf:
         merged.update(conf)
     cds = None
-    launches_jvm = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
-    if launches_jvm and "spark.driver.defaultJavaOptions" not in (conf or {}):
+    if launches_jvm() and "spark.driver.defaultJavaOptions" not in (conf or {}):
         cds = _ClassDataSharing.plan(merged)
         options = cds.java_options() if cds else ""
         if options:

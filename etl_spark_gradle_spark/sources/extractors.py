@@ -29,6 +29,14 @@ from etl_spark_gradle_spark.plans.config import (
 )
 
 _FILE_FORMATS = {"parquet", "avro", "json", "csv", "orc", "text", "xml"}
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def reads_nanos_as_long(options: dict[str, str]) -> bool:
+    """True when a parquet file source opts into ``nanosAsLong``."""
+    return options.get("format", "parquet").lower() == "parquet" and str(
+        options.get("nanosAsLong", "")
+    ).lower() in ("true", "1")
 
 
 def _is_missing_datasource(e: Exception, name: str) -> bool:
@@ -59,12 +67,14 @@ def extract_file(
         raise ConfigError("file source requires 'path'")
     if fmt not in _FILE_FORMATS:
         raise ConfigError(f"unsupported file format '{fmt}' (supported: {sorted(_FILE_FORMATS)})")
-    if fmt == "parquet" and str(options.get("nanosAsLong", "")).lower() in ("true", "1"):
+    if reads_nanos_as_long(options):
         # TIMESTAMP(NANOS) parquet (written by arrow/polars pipelines) is
         # rejected by Spark's vectorized reader; this opt-in surfaces the
         # nanos as LONG — convert downstream with e.g.
-        # map: "ts:timestamp_micros(CAST(ts_nanos DIV 1000 AS BIGINT))"
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # map: "ts:timestamp_micros(CAST(ts_nanos DIV 1000 AS BIGINT))".
+        # The key is session-wide and also read when the scan runs;
+        # PipelineExecutor sets it for the run and restores it after
+        spark.conf.set(NANOS_AS_LONG, "true")
     reader = spark.read.format(fmt)
     if options.get("schema"):
         # Explicit DDL schema ("id INT, name STRING"): at scale this is

@@ -21,6 +21,7 @@ from etl_spark_gradle_spark.plans import (
     parse_pipeline_dict,
 )
 from etl_spark_gradle_spark.plans.config import ConfigError
+from etl_spark_gradle_spark.sources.extractors import NANOS_AS_LONG
 
 
 class TestYamlParsing:
@@ -474,19 +475,10 @@ def test_inline_aggregation_parser_forms():
         _parse_inline_aggregations("missing_alias(sum(x))", "t")
 
 
-def test_nanos_parquet_opt_in(spark, tmp_path):
-    """TIMESTAMP(NANOS) parquet reads via the nanosAsLong opt-in and
-    converts downstream with a map expression. (The file is synthesized
-    with pyarrow ns-timestamps — testdata's events.parquet has shipped
-    both NANOS and MICROS encodings across generations, so the test
-    pins its own input.)"""
+def _nanos_parquet(path) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from etl_spark_gradle_spark.operators.relational import map_columns, parse_map_expressions
-    from etl_spark_gradle_spark.sources.extractors import extract_file
-
-    path = str(tmp_path / "nanos.parquet")
     table = pa.table(
         {
             "event_id": pa.array([1, 2], type=pa.int64()),
@@ -494,17 +486,62 @@ def test_nanos_parquet_opt_in(spark, tmp_path):
                            type=pa.timestamp("ns")),
         }
     )
-    pq.write_table(table, path, store_schema=False)
+    pq.write_table(table, str(path), store_schema=False)
+    return str(path)
 
-    df = extract_file(
-        spark, {"path": path, "format": "parquet", "nanosAsLong": "true"}
-    )
-    assert dict(df.dtypes)["ts"] == "bigint"
-    out = map_columns(
-        df, parse_map_expressions("event_time:timestamp_micros(CAST(ts DIV 1000 AS BIGINT))")
-    )
-    row = out.select("event_time").first()
-    assert str(row.event_time).startswith("2025-01-01")
+
+def test_nanos_parquet_opt_in(spark, tmp_path):
+    """TIMESTAMP(NANOS) parquet reads via the nanosAsLong opt-in and
+    converts downstream with a map expression. (The file is synthesized
+    with pyarrow ns-timestamps — testdata's events.parquet has shipped
+    both NANOS and MICROS encodings across generations, so the test
+    pins its own input.)"""
+    from etl_spark_gradle_spark.operators.relational import map_columns, parse_map_expressions
+    from etl_spark_gradle_spark.sources.extractors import extract_file
+
+    path = _nanos_parquet(tmp_path / "nanos.parquet")
+
+    try:
+        df = extract_file(
+            spark, {"path": path, "format": "parquet", "nanosAsLong": "true"}
+        )
+        assert dict(df.dtypes)["ts"] == "bigint"
+        out = map_columns(
+            df, parse_map_expressions("event_time:timestamp_micros(CAST(ts DIV 1000 AS BIGINT))")
+        )
+        row = out.select("event_time").first()
+        assert str(row.event_time).startswith("2025-01-01")
+    finally:
+        # extract_file sets the session-wide key; only the executor scopes it
+        spark.conf.unset(NANOS_AS_LONG)
+
+
+def test_executor_restores_nanos_as_long(spark, tmp_path):
+    """A run whose source opts into ``nanosAsLong`` reads the nanos as
+    LONG, and afterwards the session key reads its prior value."""
+    path = _nanos_parquet(tmp_path / "nanos.parquet")
+    prior = spark.conf.get(NANOS_AS_LONG, None)
+    doc = {
+        "pipelineId": "nanos",
+        "source": {
+            "type": "file",
+            "options": {"path": path, "format": "parquet", "nanosAsLong": "true"},
+        },
+        "transformations": [{
+            "type": "map",
+            "options": {"expressions": "event_time:timestamp_micros(CAST(ts DIV 1000 AS BIGINT))"},
+        }],
+        "sink": {
+            "type": "file", "options": {"path": str(tmp_path / "out"), "format": "parquet"},
+            "writeMode": "overwrite",
+        },
+    }
+    metrics = PipelineExecutor().execute(parse_pipeline_dict(doc), spark)
+    assert metrics.status == "SUCCESS", metrics.error_details
+    assert metrics.records_loaded == 2
+    assert spark.conf.get(NANOS_AS_LONG, None) == prior
+    out = spark.read.parquet(str(tmp_path / "out"))
+    assert min(str(r.event_time) for r in out.collect()).startswith("2025-01-01")
 
 
 class TestKafkaDatasourceGap:

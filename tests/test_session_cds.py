@@ -144,7 +144,7 @@ def recorded(tmp_path_factory, sf_dir):
 def test_cli_stdout_stays_json_when_recording_and_mapping(recorded):
     cache, archive, pipeline, first, _ = recorded
     _assert_json_lines(first.stdout)
-    assert '"pipeline finished"' in first.stderr and '"SUCCESS"' in first.stderr
+    assert '"pipeline finished"' in first.stdout and '"SUCCESS"' in first.stdout
     # the recording process waited for its JVM and published one archive
     assert _cache_files(cache) == [archive.name]
     assert [p.name for p in cache.rglob("*.lock")] == [f"{archive.stem}.lock"]
