@@ -30,10 +30,10 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument(
         "--explain",
         action="store_true",
-        help="dry run: build the full plan, log the resolved lineage chain "
-        "and the formatted physical plan (the last line's 'plan' field), "
-        "execute nothing (no sink write, no extract job beyond schema "
-        "resolution)",
+        help="dry run: log the lineage chain and the formatted physical plan "
+        "(the last line's 'plan' field), built under the run's session conf "
+        "and without the quality gate's split and side actions; executes "
+        "nothing (no sink write, no extract job beyond schema resolution)",
     )
     args = parser.parse_args(argv)
 
@@ -74,23 +74,29 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def _explain(config, spark, logger) -> int:
-    """Plan-review mode: the exact pre-sink plan the run would execute —
-    pushed filters, ReadSchema pruning, exchanges and broadcasts are all
-    visible before paying for the job. The formatted plan rides the last
-    log line's ``plan`` field."""
+    """Plan-review mode: the pre-sink plan the run would execute, built
+    and planned under the run's session conf (``shufflePartitions``, a
+    drain's partitions) from the run's extract step — pushed filters,
+    ReadSchema pruning, exchanges and broadcasts are all visible before
+    paying for the job. The plan starts at the extract: the quality
+    gate's split and side actions are not in it. The formatted plan
+    rides the last log line's ``plan`` field."""
     import contextlib
     import io
 
     from etl_spark_gradle_spark.plans import PipelineExecutor
     from etl_spark_gradle_spark.plans.config import RunContext
+    from etl_spark_gradle_spark.plans.executor import _run_conf, session_conf
 
     try:
-        ctx = RunContext.create(config.pipeline_id, spark)
-        _, transformed, steps, _, _ = PipelineExecutor().build_plan(config, ctx)
-        logger.info("lineage chain", steps=steps)
+        executor, ctx = PipelineExecutor(), RunContext.create(config.pipeline_id, spark)
         plan = io.StringIO()
-        with contextlib.redirect_stdout(plan):
-            transformed.explain("formatted")
+        with session_conf(spark, _run_conf(config, spark)):
+            df = executor.extract(config, ctx)[1]
+            transformed, steps, _, _ = executor.build_plan(config, ctx, df)
+            with contextlib.redirect_stdout(plan):
+                transformed.explain("formatted")
+        logger.info("lineage chain", steps=steps)
         logger.info("explain complete", status="SUCCESS", plan=plan.getvalue())
         return 0
     except Exception as e:  # noqa: BLE001 — dry-run errors exit cleanly

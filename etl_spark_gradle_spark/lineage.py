@@ -3,7 +3,8 @@
 Parity: ``lineage/LineageTracker.scala:28-122`` — every extractor stamps
 ``_lineage`` (source type/identifier/extraction timestamp), every
 transformer appends a step like ``"filter(condition=age > 30)"`` to
-``transformationChain``; join merges left+right chains.
+``transformationChain``. The reference's join also merges left+right
+chains; here a join is one step of the run's single chain.
 
 Deliberate divergence (SURVEY §1.4): the reference re-reads the first
 row's JSON per transformer (``transformer/FilterTransformer.scala:87``
@@ -64,8 +65,3 @@ def stamp_lineage(df: DataFrame, meta: LineageMetadata, pipeline_id: str, run_id
     """Single literal-column stamp (parity of effect:
     ``extractor/S3Extractor.scala:107-122``)."""
     return df.withColumn(LINEAGE_COLUMN, F.lit(lineage_json(meta, pipeline_id, run_id)))
-
-
-def merge_chains(left: LineageMetadata, right: LineageMetadata) -> tuple[str, ...]:
-    """Join lineage merge (parity: ``lineage/LineageTracker.scala:91-122``)."""
-    return tuple(list(left.transformation_chain) + list(right.transformation_chain))

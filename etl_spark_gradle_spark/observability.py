@@ -10,12 +10,13 @@ Divergence note: the reference times three separate actions because it
 executes the plan three times (SURVEY §4 anti-pattern). This engine has
 ONE action per output (the sink write), so phase timings mean: ``plan``
 = driver time composing the lazy plan, ``load`` = the sink action that
-executes the whole plan, ``quality`` (when enabled) = wall time from
-extracting and submitting the quality gate's side actions (duplicate
-hash-agg, quarantine write) to joining them. Those actions run alongside
-the sink write, so ``quality`` contains ``plan`` and ``load``: phases
-overlap, and their sum can exceed the run. Counts still come from
-``Observation``s riding the actions.
+executes the whole plan, ``extract`` = reading the source and
+registering the views, ``quality`` (when enabled) = wall time from
+submitting the quality gate's side actions (duplicate hash-agg,
+quarantine write), once the plan is built, to joining them. Those
+actions run alongside the sink write, so ``quality`` contains ``load``:
+phases overlap, and their sum can exceed the run. Counts still come
+from ``Observation``s riding the actions.
 """
 
 from __future__ import annotations

@@ -73,23 +73,6 @@ __all__ = [
 _LLOYD_CHUNK = 4
 
 
-def _with_centroids(pts: DataFrame, centroids) -> DataFrame:
-    """Attach the driver-side centroid table as ONE broadcast
-    array<array<long>> attribute (``_c``) via a 1-row cross join.
-    Two generations of this helper were expression-literal based and
-    both paid for it in Catalyst ANALYSIS time, not execution: k
-    separate ``aggregate(zip_with(...))`` trees cost ~25 s per 3
-    iterations at k*dim=512, and even a single 2-D array literal is
-    512 Literal nodes re-analyzed per iteration (~5.7 s total). A
-    1-row broadcast is ONE attribute reference — measured 2.8 s for
-    the same plan, byte-identical output."""
-    cdf = pts.sparkSession.createDataFrame(
-        [([[int(v) for v in c] for c in centroids],)],
-        "_c array<array<long>>",
-    )
-    return pts.crossJoin(F.broadcast(cdf))
-
-
 def _dist_arr(qcol):
     """Exact integer squared L2 distances from ``qcol`` (array<long>)
     to every centroid in the broadcast ``_c`` column, as one array."""

@@ -553,21 +553,6 @@ def contamination_check(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """k seeded min-hashes of a shingle array as one array<bigint>
-    column, all JVM-side, no UDF.
-
-    Each shingle STRING is hashed exactly once (``xxhash64(s)``); the
-    k-member family is then derived by re-hashing that 8-byte value with
-    the seed (``xxhash64(seed_i, h)``). Hashing longs instead of strings
-    k times cuts the dominant cost ~10x at corpus scale and stays
-    overflow-free under ANSI (no wrapping multiply-add tricks).
-    """
-    return minhash_signature_from_hashes(
-        F.transform(shingles, lambda s: F.xxhash64(s)), num_hashes
-    )
-
-
 def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 64) -> Column:
     """Signature from an already-hashed shingle array (array<bigint>).
     Split out so callers can materialize the base hashes once instead of

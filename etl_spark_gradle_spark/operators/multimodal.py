@@ -43,7 +43,7 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -68,20 +68,6 @@ _MAGIC: dict[str, str] = {
     "4F676753": "ogg",
     "494433": "mp3",
 }
-
-
-def read_binary_dir(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Ingest raw media files as binary rows via Spark's ``binaryFile``
-    source: columns ``path, modificationTime, length, content``.
-    Partitioning comes from file splits; small-file explosion should be
-    compacted to Parquet with this reader + ``attach_media_metadata``
-    once, then served from Parquet."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
 
 
 def with_media_metadata(

@@ -1,9 +1,27 @@
-"""Pipeline executor: extract -> transform* -> load, with quality gates.
+"""Pipeline executor: extract -> quality gate -> plan -> load.
 
-Parity: ``pipeline/PipelineExecutor.scala:23-165`` — same phase
-structure, same failure contract (catch-all -> ``ExecutionMetrics``
-with status=FAILED), same quality-gated variant (null-check split,
-quarantine, transform only the valid branch).
+Parity: ``pipeline/PipelineExecutor.scala:23-165`` — the same flat phase
+sequence and failure contract (catch-all -> ``ExecutionMetrics`` with
+status=FAILED). ``PipelineExecutor.execute`` is the one run path, for
+batch, quality-gated and ``streaming: true`` pipelines alike:
+
+1. one ``session_conf`` scope (``_run_conf``) around the whole run;
+2. ``extract``: the main source (a batch read, or a ``readStream``) and
+   the views;
+3. the quality gate's lazy split (``quality.quality_gate``): schema
+   validation, the valid branch and the side actions, none started. It
+   is a no-op when quality is off;
+4. ``build_plan`` on the valid branch;
+5. the loader lookup;
+6. the gate's side actions start (``quality.side_actions``);
+7. the load: the lineage stamp and ``loader.load``, or
+   ``streaming.write_stream`` and the drain's progress counts;
+8. the side actions are joined, the counts filled and an incremental
+   source's processed-file state committed.
+
+Every registry lookup and plan error comes before step 6, so a mistyped
+transformation or sink type fails the run before any Spark job and before
+the sink or the quarantine is written.
 
 Deliberate divergences for scale (SURVEY §4 anti-patterns):
 - The reference runs ``count()`` after extract and after transform plus
@@ -31,9 +49,9 @@ Deliberate divergences for scale (SURVEY §4 anti-patterns):
   FAILED quality run may have written either of them (the quarantine
   is appended; ``file_incremental`` stays at-least-once). The run
   reports the error the reference's order would have raised first.
-- ``streaming: true`` (an extension) builds its plan in ``build_plan``
-  too, from a ``readStream`` source, with only the transformers that
-  declare ``streamable``. Its output carries no ``_lineage`` column.
+- ``streaming: true`` (an extension) runs the same steps with a
+  ``readStream`` source and only the transformers that declare
+  ``streamable``. Its output carries no ``_lineage`` column.
 - A batch run into a file sink spreads an under-split source over the
   cores before its transformations (a parquet source under one row
   group's size arrives as one split carrying rows, and its sink write
@@ -66,6 +84,7 @@ import time
 import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager, nullcontext
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -124,16 +143,42 @@ def row_hash_duplicate_stats(df: DataFrame) -> dict[str, int]:
     return {"total": total, "distinct": distinct, "duplicates": total - distinct}
 
 
-def _source_conf(config: PipelineConfig) -> dict[str, str]:
-    """Session conf the run's sources need for the whole run: a parquet
-    source or view with ``nanosAsLong`` sets a session-wide key, which
-    the run's ``session_conf`` scope then restores."""
+def _run_conf(config: PipelineConfig, spark: SparkSession) -> dict[str, object]:
+    """Session conf for the whole run, in one ``session_conf`` scope:
+    ``performance.shufflePartitions``, and ``nanosAsLong`` when a parquet
+    source or view sets it (the reader sets a session-wide key).
+
+    A ``streaming: true`` drain takes ``shufflePartitions`` when set,
+    else min(session value, ``defaultParallelism``): AQE does not
+    coalesce a micro-batch's shuffle, so the session's batch-sized
+    ceiling would cost one state-store task per partition per batch.
+    Spark pins the count in the checkpoint's offset log at first start,
+    so this sizes new checkpoints only. A drain whose checkpoint and
+    file-sink metadata live on the local filesystem writes them through
+    Spark's ``FileSystemBasedCheckpointFileManager``
+    (``streaming.local_checkpoint``), and an ``availableNow`` drain
+    (``streaming.is_drain``) unloads its state stores on commit, after a
+    synchronous maintenance pass, so none outlives the drain."""
     from etl_spark_gradle_spark.sources.extractors import NANOS_AS_LONG, reads_nanos_as_long
 
+    partitions = config.performance.shuffle_partitions
+    settings = {SHUFFLE_PARTITIONS: partitions}
     sources = [config.source, *(source for _, source in config.views)]
     if any(reads_nanos_as_long(source.options) for source in sources):
-        return {NANOS_AS_LONG: "true"}
-    return {}
+        settings[NANOS_AS_LONG] = "true"
+    if not config.streaming:
+        return settings
+    from etl_spark_gradle_spark import streaming
+
+    sink = with_resolved_credentials(config.sink).options
+    settings[SHUFFLE_PARTITIONS] = partitions or min(
+        int(spark.conf.get(SHUFFLE_PARTITIONS)), spark.sparkContext.defaultParallelism
+    )
+    if streaming.local_checkpoint(spark, sink):
+        settings[streaming.CHECKPOINT_FILE_MANAGER] = streaming.FILE_SYSTEM_CHECKPOINTS
+    if streaming.is_drain(sink):
+        settings[streaming.UNLOAD_ON_COMMIT] = "true"
+    return settings
 
 
 def _spreads_output(config: PipelineConfig) -> bool:
@@ -146,12 +191,25 @@ def _spreads_output(config: PipelineConfig) -> bool:
     )
 
 
+class Plan(NamedTuple):
+    """``build_plan``'s lazy plan: the transformed frame, its lineage
+    steps, the extract ``Observation`` that rides the sink action (None
+    when not counted) and the frames ``cacheIntermediate`` cached."""
+
+    transformed: DataFrame
+    steps: list[str]
+    extract_obs: Observation | None
+    cached: list[DataFrame]
+
+
 class PipelineExecutor:
     """Drives one ``PipelineConfig`` to completion.
 
     Three-level API preserved from the reference (SURVEY §3.3):
     (a) CLI (``cli.py``), (b) ``PipelineExecutor().execute(config, spark)``,
-    (c) the individual operator functions in ``operators/``.
+    (c) the individual operator functions in ``operators/``. ``extract``
+    and ``build_plan`` are the run's steps 2 and 4, public for callers
+    that want the plan without running it (``cli --explain``).
     """
 
     def __init__(self, extractors=None, transformers=None, loaders=None):
@@ -164,55 +222,98 @@ class PipelineExecutor:
         self.transformers = transformers or TRANSFORMER_REGISTRY
         self.loaders = loaders or LOADER_REGISTRY
 
-    # -- plan construction (no actions) ------------------------------------
-
-    def build_plan(
+    def execute(
         self,
         config: PipelineConfig,
-        ctx: RunContext,
-        input_df: DataFrame | None = None,
-    ) -> tuple[DataFrame, DataFrame, list[str], Observation, list[DataFrame]]:
-        """Compose the full lazy plan (phase structure parity:
-        ``pipeline/PipelineExecutor.scala:30-48``), batch or streaming.
+        spark: SparkSession,
+        collector: MetricsCollector | None = None,
+    ) -> ExecutionMetrics:
+        """Run the pipeline, batch, quality-gated or ``streaming: true``
+        (parity: ``pipeline/PipelineExecutor.scala:23-165``), through the
+        steps in the module docstring. Any error ends the run with
+        status FAILED and its text in ``error_details``; the session conf
+        is restored and the gate's side actions are joined first."""
+        # not at module top: quality imports plans.config, so a top-level
+        # import would leave "import etl_spark_gradle_spark.quality" half
+        # initialized (plans/__init__ -> executor -> quality)
+        from etl_spark_gradle_spark.quality import quality_gate, side_actions
 
-        ``input_df`` lets the quality path feed the valid branch through
-        the SAME performance/transformation plumbing as the plain path.
-        Returns (extracted, transformed, lineage_steps, extract_obs,
-        cached_frames); ``extract_obs`` rides the eventual sink action —
-        no separate counting job. A streaming plan reads a ``readStream``
-        and has no ``extract_obs``; its steps pick their streaming form
-        from ``df.isStreaming``.
+        ctx = RunContext.create(config.pipeline_id, spark)
+        collector = collector or MetricsCollector()
+        collector.pipeline_id, collector.run_id = config.pipeline_id, ctx.run_id
+        metrics = ExecutionMetrics(config.pipeline_id, ctx.run_id, start_timestamp=time.time())
+        metrics.status = "RUNNING"
+        plan = report = None
+        try:
+            with session_conf(spark, _run_conf(config, spark)):
+                with collector.phase("extract"):
+                    extractor, df = self.extract(config, ctx)
+                valid, actions = quality_gate(
+                    df, config.quality, config.pipeline_id, ctx.run_id, config.source.schema_path
+                )
+                with collector.phase("plan"):
+                    plan = self.build_plan(config, ctx, valid)
+                # a drain writes through streaming.write_stream, no loader
+                loader = None if config.streaming else _registered(
+                    self.loaders, "loader", "sink type", config.sink.type
+                )
+                # the quality phase spans the side actions, from submission
+                # to join: it overlaps the load
+                quality = collector.phase("quality") if config.quality.enabled else nullcontext()
+                with quality, side_actions(spark, actions) as report, collector.phase("load"):
+                    extracted, metrics.records_loaded = self._load(
+                        config, ctx, plan, extractor, loader
+                    )
+            metrics.records_transformed = metrics.records_loaded
+            # the extract count observes the gate's valid branch: the
+            # quarantined rows are added back
+            metrics.records_extracted = extracted + report.quarantined if extracted >= 0 else -1
+            metrics.quality_report = report if config.quality.enabled else None
+            # an incremental source (file_incremental) staged its batch at
+            # extract time and marks it processed only here, after every
+            # action succeeded: a failed run re-discovers the same files
+            if hasattr(extractor, "commit_processed"):
+                extractor.commit_processed(config.source)
+            collector.record("extract", metrics.records_extracted)
+            collector.record("load", metrics.records_loaded)
+            metrics.status = "SUCCESS"
+        except Exception as e:  # noqa: BLE001 — failure contract returns metrics
+            metrics.status = "FAILED"
+            metrics.error_details = f"{type(e).__name__}: {e}"
+        finally:
+            # filled when the side actions were joined, a failed load too
+            if report is not None:
+                metrics.records_failed = report.quarantined
+            for frame in plan.cached if plan else ():
+                try:
+                    frame.unpersist()
+                except Exception:  # noqa: BLE001 — best-effort cleanup
+                    pass
+            metrics.end_timestamp = time.time()
+        return metrics
 
-        Without ``performance.repartition``, a batch plan into a file sink
-        (``_spreads_output``) repartitions its source round-robin to
-        ``defaultParallelism`` when the source scan has fewer splits that
-        carry rows (``operators.dedup._ensure_parallelism``): a parquet
-        file under one row group's size is read, and its output encoded,
-        by one task.
-        """
-        if input_df is not None:
-            df = input_df
-        elif config.streaming:
+    def extract(self, config: PipelineConfig, ctx: RunContext) -> tuple[object, DataFrame]:
+        """Step 2: the main source's frame, a ``readStream`` for a
+        ``streaming: true`` pipeline (``streaming.read_source_stream``),
+        and the views, registered as temp views for join/setop/range_join
+        ``rightTable`` lookups. Lazy like everything else: a view that no
+        transformation reads is never scanned.
+
+        Returns ``(extractor, df)``: the source's registry entry, which
+        the run asks for the lineage source identifier and the
+        post-success state commit, and the frame."""
+        extractor = _registered(self.extractors, "extractor", "source type", config.source.type)
+        source = with_resolved_credentials(config.source)
+        if config.streaming:
             from etl_spark_gradle_spark import streaming
 
-            df = streaming.read_source_stream(with_resolved_credentials(config.source), ctx.spark)
+            df = streaming.read_source_stream(source, ctx.spark)
         else:
-            extractor = self.extractors.get(config.source.type)
-            if extractor is None:
-                raise KeyError(
-                    f"no extractor registered for source type '{config.source.type}'"
-                )
-            df = extractor.extract(with_resolved_credentials(config.source), ctx.spark)
-
-        # secondary sources → named temp views, available to join/setop/
-        # range_join rightTable lookups. Lazy like everything else: a
-        # view that no transformation reads is never scanned.
+            df = extractor.extract(source, ctx.spark)
         for view_name, view_src in config.views:
-            view_extractor = self.extractors.get(view_src.type)
-            if view_extractor is None:
-                raise KeyError(
-                    f"no extractor registered for views.{view_name} type '{view_src.type}'"
-                )
+            view_extractor = _registered(
+                self.extractors, "extractor", f"views.{view_name} type", view_src.type
+            )
             if hasattr(view_extractor, "commit_processed"):
                 # only the MAIN source participates in the post-success
                 # state commit; an incremental view would stage pending
@@ -227,7 +328,24 @@ class PipelineExecutor:
             view_extractor.extract(
                 with_resolved_credentials(view_src), ctx.spark
             ).createOrReplaceTempView(view_name)
+        return extractor, df
 
+    def build_plan(self, config: PipelineConfig, ctx: RunContext, df: DataFrame) -> Plan:
+        """Step 4: compose the lazy plan on ``df`` — the extract, or the
+        quality gate's valid branch (phase structure parity:
+        ``pipeline/PipelineExecutor.scala:30-48``), batch or streaming.
+        No action runs; ``extract_obs`` rides the eventual sink action,
+        no separate counting job. A streaming plan has no
+        ``extract_obs``; its steps pick their streaming form from
+        ``df.isStreaming``.
+
+        Without ``performance.repartition``, a batch plan into a file sink
+        (``_spreads_output``) repartitions its source round-robin to
+        ``defaultParallelism`` when the source scan has fewer splits that
+        carry rows (``operators.dedup._ensure_parallelism``): a parquet
+        file under one row group's size is read, and its output encoded,
+        by one task.
+        """
         if config.performance.repartition:
             df = df.repartition(config.performance.repartition)
         elif not config.streaming and _spreads_output(config):
@@ -246,239 +364,85 @@ class PipelineExecutor:
 
         steps: list[str] = []
         cached: list[DataFrame] = []
-        out = df
         for t_config in config.transformations:
-            transformer = self.transformers.get(t_config.type)
-            if transformer is None:
-                raise KeyError(f"no transformer registered for type '{t_config.type}'")
+            transformer = _registered(self.transformers, "transformer", "type", t_config.type)
             if config.streaming and not getattr(transformer, "streamable", False):
                 raise ConfigError(
                     f"transformation '{t_config.type}' is not streamable — supported in "
                     "streaming mode: filter, map, windowing, dedup, ewma"
                 )
-            out = transformer.transform(out, t_config, ctx)
+            df = transformer.transform(df, t_config, ctx)
             steps.append(transformer.lineage_step(t_config))
             if config.performance.cache_intermediate:
-                out = out.cache()
-                cached.append(out)
-        return df, out, steps, extract_obs, cached
+                df = df.cache()
+                cached.append(df)
+        return Plan(df, steps, extract_obs, cached)
 
-    # -- execution ----------------------------------------------------------
+    def _load(self, config, ctx, plan: Plan, extractor, loader) -> tuple[int, int]:
+        """Step 7: the plan's one action. Returns (rows extracted, rows
+        loaded), -1 where not known.
 
-    def execute(
-        self,
-        config: PipelineConfig,
-        spark: SparkSession,
-        collector: MetricsCollector | None = None,
-    ) -> ExecutionMetrics:
-        """Plain run (parity: ``pipeline/PipelineExecutor.scala:23-83``).
-        Routes to the quality-gated path when quality checks are enabled
-        (parity: ``Main.scala:105-123``); a ``streaming: true`` pipeline
-        (extension, never quality-gated) runs as one drain."""
-        if config.quality.enabled:
-            return self.execute_with_quality(config, spark, collector)
-        return self._run(config, spark, quality=False, collector=collector)
+        Batch: the lineage stamp, then ``loader.load``; the extract count
+        is the ``Observation`` that rode the write. Streaming: one
+        ``streaming.write_stream`` drain, with no lineage column, counted
+        by ``_progress_counts``."""
+        sink = with_resolved_credentials(config.sink)
+        if config.streaming:
+            from etl_spark_gradle_spark import streaming
 
-    def _drain(
-        self,
-        config: PipelineConfig,
-        ctx: RunContext,
-        collector: MetricsCollector,
-        metrics: ExecutionMetrics,
-    ) -> None:
-        """``streaming: true`` mode — one availableNow drain: the plan
-        ``build_plan`` builds, started by ``streaming.write_stream``
-        (``load`` spans the whole drain), with no lineage column.
+            query = streaming.write_stream(
+                plan.transformed, sink.options, output_mode="append", await_termination=True
+            )
+            return _progress_counts(query, ctx.spark)
+        source_id = extractor.source_identifier(config.source)
+        meta = lineage_mod.build_lineage(config.source.type, source_id, plan.steps)
+        final = lineage_mod.stamp_lineage(plan.transformed, meta, config.pipeline_id, ctx.run_id)
+        loaded = loader.load(final, sink, ctx.run_id).records_written
+        return _observed_count(plan.extract_obs), loaded
 
-        Shuffle partitions: ``performance.shufflePartitions`` when set,
-        else min(session value, ``defaultParallelism``). AQE does not
-        coalesce a micro-batch's shuffle, so the session's batch-sized
-        ceiling would cost one state-store task per partition per batch.
-        Spark pins the count in the checkpoint's offset log at first
-        start: this sizes new checkpoints only, old ones keep theirs.
 
-        Counts come from the finished query's progress, no extra job:
-        ``records_extracted`` sums the batches' ``numInputRows`` — the
-        rows the source produced, after any filter Spark pushed into the
-        scan (a leading ``filter`` on a JSON or Parquet file source), so
-        it can be below the rows landed. ``records_loaded`` is the
-        sink's ``numOutputRows``, or -1 when the sink reports none (a
-        file sink reports -1). Both read -1 when the drain ran enough
-        batches to fill the query's progress buffer
-        (``spark.sql.streaming.numRecentProgressUpdates``, default 100).
+def _registered(registry, kind: str, field: str, key: str):
+    """``registry.get(key)``, or a KeyError that names the pipeline field
+    asking for it: "no loader registered for sink type 'x'"."""
+    found = registry.get(key)
+    if found is None:
+        raise KeyError(f"no {kind} registered for {field} '{key}'")
+    return found
 
-        A drain whose checkpoint and file-sink metadata live on the local
-        filesystem writes them through Spark's
-        ``FileSystemBasedCheckpointFileManager``
-        (``streaming.local_checkpoint``), scoped like the partitions. An
-        ``availableNow`` drain (``streaming.is_drain``) also unloads its
-        state stores on commit, after a synchronous maintenance pass, so
-        none outlives the drain."""
-        from etl_spark_gradle_spark import streaming
 
-        spark = ctx.spark
-        sink = with_resolved_credentials(config.sink).options
-        partitions = config.performance.shuffle_partitions or min(
-            int(spark.conf.get(SHUFFLE_PARTITIONS)), spark.sparkContext.defaultParallelism
-        )
-        settings = {SHUFFLE_PARTITIONS: partitions, **_source_conf(config)}
-        if streaming.local_checkpoint(spark, sink):
-            settings[streaming.CHECKPOINT_FILE_MANAGER] = streaming.FILE_SYSTEM_CHECKPOINTS
-        if streaming.is_drain(sink):
-            settings[streaming.UNLOAD_ON_COMMIT] = "true"
-        with session_conf(spark, settings):
-            with collector.phase("plan"):
-                transformed = self.build_plan(config, ctx)[1]
-            with collector.phase("load"):
-                query = streaming.write_stream(
-                    transformed, sink, output_mode="append", await_termination=True
-                )
-        progress = query.recentProgress
-        # Spark keeps numRecentProgressUpdates - 1 entries, dropping
-        # the oldest: a full buffer may have lost batches
-        kept = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")) - 1
-        if len(progress) < kept:
-            metrics.records_extracted = sum(p.numInputRows for p in progress)
-            outputs = [p.sink.numOutputRows for p in progress]
-            metrics.records_loaded = sum(outputs) if min(outputs, default=0) >= 0 else -1
-        else:
-            metrics.records_extracted = metrics.records_loaded = -1
-        metrics.records_transformed = metrics.records_loaded
+def _observed_count(obs: Observation | None) -> int:
+    """The extract count that rode the sink action, or -1 when not
+    counted (``skipExtractCount``) or lost. ``Observation.get`` raises a
+    JVM assertion when the observed node's metrics never materialized:
+    AQE can eliminate the observed subtree entirely (seen: an EMPTY
+    keyword-match relation empty-propagated through a LEFT ANTI join
+    whose other side re-reads the source, leaving no executed task with
+    the observe node). The output is correct then, so the count degrades
+    to -1 instead of failing the run."""
+    if obs is None:
+        return -1
+    try:
+        return int(obs.get["records_extracted"])
+    except Exception:  # noqa: BLE001 — lost-observation fallback
+        return -1
 
-    def execute_with_quality(
-        self,
-        config: PipelineConfig,
-        spark: SparkSession,
-        collector: MetricsCollector | None = None,
-    ) -> ExecutionMetrics:
-        """Quality-gated run (parity:
-        ``pipeline/PipelineExecutor.scala:90-165``): extract -> schema
-        validation -> null-check split -> transform valid -> load, with
-        the duplicate check and the quarantine write of the invalid rows
-        running alongside the load (``quality.quality_gate``). The valid
-        branch goes through ``build_plan`` so performance knobs behave
-        identically to the plain path."""
-        return self._run(config, spark, quality=True, collector=collector)
 
-    def _run(
-        self,
-        config: PipelineConfig,
-        spark: SparkSession,
-        quality: bool,
-        collector: MetricsCollector | None = None,
-    ) -> ExecutionMetrics:
-        ctx = RunContext.create(config.pipeline_id, spark)
-        collector = collector or MetricsCollector()
-        collector.pipeline_id, collector.run_id = config.pipeline_id, ctx.run_id
-        metrics = ExecutionMetrics(config.pipeline_id, ctx.run_id, start_timestamp=time.time())
-        metrics.status = "RUNNING"
-        cached: list[DataFrame] = []
-        try:
-            if config.streaming:
-                self._drain(config, ctx, collector, metrics)
-            else:
-                partitions = config.performance.shuffle_partitions
-                settings = {SHUFFLE_PARTITIONS: partitions, **_source_conf(config)}
-                with session_conf(spark, settings):
-                    extractor = self.extractors.get(config.source.type)
-                    if extractor is None:
-                        raise KeyError(
-                            f"no extractor registered for source type '{config.source.type}'"
-                        )
-
-                    # the quality phase spans the gate's side actions, from
-                    # submission to join, so it overlaps plan and load
-                    with collector.phase("quality") if quality else nullcontext():
-                        input_df, pending, report = None, None, None
-                        if quality:
-                            # imported here, not at module top: quality.py imports
-                            # plans.config, and a module-top import would make
-                            # "import etl_spark_gradle_spark.quality" fail standalone
-                            # (plans/__init__ -> executor -> partially-initialized quality)
-                            from etl_spark_gradle_spark.quality import quality_gate
-
-                            extracted = extractor.extract(
-                                with_resolved_credentials(config.source), ctx.spark
-                            )
-                            input_df, pending = quality_gate(
-                                extracted,
-                                config.quality,
-                                config.pipeline_id,
-                                ctx.run_id,
-                                schema_path=config.source.schema_path,
-                            )
-                        try:
-                            with collector.phase("plan"):
-                                extracted_df, transformed, steps, extract_obs, cached = (
-                                    self.build_plan(config, ctx, input_df=input_df)
-                                )
-
-                            source_id = extractor.source_identifier(config.source)
-                            meta = lineage_mod.build_lineage(config.source.type, source_id, steps)
-                            final = lineage_mod.stamp_lineage(
-                                transformed, meta, config.pipeline_id, ctx.run_id
-                            )
-
-                            loader = self.loaders.get(config.sink.type)
-                            if loader is None:
-                                raise KeyError(
-                                    f"no loader registered for sink type '{config.sink.type}'"
-                                )
-                            with collector.phase("load"):
-                                result = loader.load(
-                                    final, with_resolved_credentials(config.sink), ctx.run_id
-                                )
-                        finally:
-                            # join the side actions on every path, so no thread
-                            # outlives the run; an error of theirs replaces one
-                            # raised above, as the reference's order would have it
-                            if pending:
-                                report = pending()
-                                metrics.records_failed = report.quarantined
-
-                    metrics.records_loaded = result.records_written
-                    metrics.records_transformed = result.records_written
-                    # the observation rode the sink action — no extra job ran.
-                    # In the quality path it observes the valid branch, so the
-                    # quarantined rows are added back to get the extracted total.
-                    # Observation.get raises a JVM assertion when the observed
-                    # node's metrics never materialized — AQE can eliminate the
-                    # observed subtree entirely (seen: an EMPTY keyword-match
-                    # relation empty-propagated through a LEFT ANTI join whose
-                    # other side re-reads the source, leaving no executed task
-                    # containing the observe node). The pipeline's OUTPUT is
-                    # correct in that case; failing the run over a lost counter
-                    # would be wrong, so degrade to the documented -1 sentinel
-                    # (same contract as performance.skipExtractCount).
-                    if extract_obs is not None:
-                        try:
-                            metrics.records_extracted = (
-                                int(extract_obs.get["records_extracted"])
-                                + metrics.records_failed
-                            )
-                        except Exception:  # noqa: BLE001 — lost-observation fallback
-                            metrics.records_extracted = -1
-                    else:
-                        metrics.records_extracted = -1
-                    metrics.quality_report = report
-                    # incremental sources (file_incremental) stage their batch
-                    # at extract time and only mark it processed HERE, after
-                    # the sink action succeeded — a failed run re-discovers the
-                    # same files next time (at-least-once)
-                    commit = getattr(extractor, "commit_processed", None)
-                    if commit is not None:
-                        commit(config.source)
-            collector.record("extract", metrics.records_extracted)
-            collector.record("load", metrics.records_loaded)
-            metrics.status = "SUCCESS"
-        except Exception as e:  # noqa: BLE001 — failure contract returns metrics
-            metrics.status = "FAILED"
-            metrics.error_details = f"{type(e).__name__}: {e}"
-        finally:
-            for frame in cached:
-                try:
-                    frame.unpersist()
-                except Exception:  # noqa: BLE001 — best-effort cleanup
-                    pass
-            metrics.end_timestamp = time.time()
-        return metrics
+def _progress_counts(query, spark: SparkSession) -> tuple[int, int]:
+    """A finished drain's (rows extracted, rows loaded), from its
+    progress, no extra job. Rows extracted sum the batches'
+    ``numInputRows`` — the rows the source produced, after any filter
+    Spark pushed into the scan (a leading ``filter`` on a JSON or Parquet
+    file source), so it can be below the rows landed. Rows loaded are
+    the sink's ``numOutputRows``, or -1 when the sink reports none (a
+    file sink reports -1). Both read -1 when the drain ran enough batches
+    to fill the query's progress buffer
+    (``spark.sql.streaming.numRecentProgressUpdates``, default 100)."""
+    progress = query.recentProgress
+    # Spark keeps numRecentProgressUpdates - 1 entries, dropping the
+    # oldest: a full buffer may have lost batches
+    kept = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")) - 1
+    if len(progress) >= kept:
+        return -1, -1
+    outputs = [p.sink.numOutputRows for p in progress]
+    loaded = sum(outputs) if min(outputs, default=0) >= 0 else -1
+    return sum(p.numInputRows for p in progress), loaded

@@ -14,7 +14,7 @@ aggregate (one job regardless of column count). Duplicate detection via
 ``distinct().count()`` is a full shuffle of every column; here it is one
 counter, ``operators.dedup.duplicate_stats``, over a 64-bit row hash
 (``plans.executor.row_hash_duplicate_stats``), so the shuffle carries
-8-byte keys. ``quality_gate`` runs the duplicate check and the
+8-byte keys. ``side_actions`` runs the duplicate check and the
 quarantine write alongside the caller's sink write instead of before it.
 """
 
@@ -22,8 +22,9 @@ from __future__ import annotations
 
 import json
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark import inheritable_thread_target
@@ -371,24 +372,18 @@ def quality_gate(
     pipeline_id: str,
     run_id: str,
     schema_path: str | None = None,
-) -> tuple[DataFrame, Callable[[], QualityReport]]:
+) -> tuple[DataFrame, dict[str, Callable[[], object]]]:
     """The quality gate of a quality-gated run (parity:
     ``pipeline/PipelineExecutor.scala:90-165``): schema validation,
     duplicate check, null-check and custom-rule split, quarantine.
 
-    Returns ``(valid, pending)``. Schema validation (against the
-    StructType JSON at ``schema_path``) runs here and raises before any
-    job. The duplicate check (report-only: nothing reads it before the
-    load) and the quarantine write are submitted to a 2-worker pool, so
-    they run while the caller writes ``valid``. Each runs under the job
-    group, job description and session tags the calling thread has now.
-
-    ``pending()`` joins both, raises the first error in the reference's
-    order (duplicate check, then quarantine write) and returns the filled
-    report. Call it on every path, failures included: it is what joins
-    the threads.
+    Returns ``(valid, actions)``: the valid branch, and the side actions
+    for ``side_actions`` — the duplicate check (report-only: nothing
+    reads it before the load) and the quarantine write. Schema
+    validation (against the StructType JSON at ``schema_path``) runs
+    here and raises before any job; nothing else runs. With quality off
+    it returns ``extracted`` and no actions.
     """
-    report = QualityReport()
     if config.schema_validation and schema_path:
         with open(schema_path, encoding="utf-8") as f:
             expected = StructType.fromJson(json.load(f))
@@ -400,13 +395,12 @@ def quality_gate(
     # tracer patches both module attributes
     from etl_spark_gradle_spark.plans import executor
 
-    actions: dict[str, Callable] = {}
+    actions: dict[str, Callable[[], object]] = {}
     if config.duplicate_check:
         actions["duplicates"] = lambda: executor.row_hash_duplicate_stats(extracted)
 
     valid = extracted
     null_checks, rules = list(config.null_checks), list(config.custom_rules)
-    check_obs: Observation | None = None
     if null_checks or rules:
         # per-check violation counters ride the quarantine write, zero
         # extra jobs; only that plan carries them, so the concurrent sink
@@ -423,25 +417,38 @@ def quality_gate(
         valid, _ = split_valid_invalid(extracted, null_checks, rules)
         _, invalid = split_valid_invalid(observed, null_checks, rules)
         path = config.quarantine_path or f"/tmp/quarantine/{pipeline_id}"
-        actions["quarantined"] = lambda: quarantine(invalid, path, pipeline_id, run_id)
+        actions["quarantined"] = lambda: (
+            quarantine(invalid, path, pipeline_id, run_id), check_obs.get
+        )
+    return valid, actions
 
-    spark = extracted.sparkSession
+
+@contextmanager
+def side_actions(spark, actions: dict[str, Callable[[], object]]) -> Iterator[QualityReport]:
+    """Run the block alongside ``quality_gate``'s side actions, submitted
+    to a 2-worker pool, each under the job group, job description and
+    session tags the calling thread has now.
+
+    On exit, on every path, the actions are joined; the first error in
+    the reference's order (duplicate check, then quarantine write)
+    replaces one the block raised, and the yielded report is filled.
+    """
+    report = QualityReport()
     pool = ThreadPoolExecutor(max_workers=2, thread_name_prefix="quality-gate")
     futures = {
         name: pool.submit(inheritable_thread_target(spark)(action))
         for name, action in actions.items()
     }
-
-    def pending() -> QualityReport:
+    try:
+        yield report
+    finally:
         pool.shutdown(wait=True)
         if "duplicates" in futures:
             report.duplicates = futures["duplicates"].result()["duplicates"]
         if "quarantined" in futures:
-            report.quarantined = report.null_violations = futures["quarantined"].result()
-            report.violations_by_check = {k: int(v or 0) for k, v in check_obs.get.items()}
-        return report
-
-    return valid, pending
+            quarantined, checks = futures["quarantined"].result()
+            report.quarantined = report.null_violations = quarantined
+            report.violations_by_check = {k: int(v or 0) for k, v in checks.items()}
 
 
 class SchemaAlignTransformer:

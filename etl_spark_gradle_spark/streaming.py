@@ -628,8 +628,8 @@ def run_streaming_pipeline(config, spark: SparkSession) -> StreamingQuery:
     from etl_spark_gradle_spark.plans.config import RunContext, with_resolved_credentials
     from etl_spark_gradle_spark.plans.executor import PipelineExecutor
 
-    ctx = RunContext.create(config.pipeline_id, spark)
-    plan = PipelineExecutor().build_plan(config, ctx)[1]
+    executor, ctx = PipelineExecutor(), RunContext.create(config.pipeline_id, spark)
+    plan = executor.build_plan(config, ctx, executor.extract(config, ctx)[1]).transformed
     sink = with_resolved_credentials(config.sink).options
     return write_stream(plan, sink, output_mode="append", await_termination=True)
 

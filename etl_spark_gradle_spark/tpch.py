@@ -61,19 +61,6 @@ def _dec(col: str) -> Column:
     return F.col(col).cast("decimal(18,2)")
 
 
-def _dbl(col: Column) -> Column:
-    """Decimal → double via a string round-trip (oracle side mirrors it
-    as ``CAST(CAST(x AS VARCHAR) AS DOUBLE)``): decimal→string is exact
-    and string→double is correctly rounded on BOTH engines, whereas
-    DuckDB's direct wide-decimal→double cast is one ulp off once the
-    decimal's digits exceed double's 53 bits (same hazard documented in
-    operators/stats.py). Direct casts were bit-equal up to sf0.1 only
-    because those sums still fit 53 bits; the sf1 sweep caught q1's
-    sum_charge drifting one ulp. At 100 TB every revenue-style sum is
-    past 53 bits, so the round-trip is the only portable spelling."""
-    return col.cast("string").cast("double")
-
-
 # l_extendedprice * (1 - l_discount), exact. The explicit intermediate
 # cast keeps Spark's and DuckDB's decimal type-widening rules out of the
 # picture: the true value has scale <= 4 and magnitude < 10^14, so the

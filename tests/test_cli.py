@@ -83,7 +83,7 @@ def test_explain_writes_its_plan_into_a_json_line(monkeypatch, capsys, fake, pip
     built = mock.Mock()
     built.explain.side_effect = lambda mode: print(f"== Physical Plan ({mode}) ==")
     monkeypatch.setattr(
-        PipelineExecutor, "build_plan", lambda self, config, ctx: (None, built, ["s"], None, [])
+        PipelineExecutor, "build_plan", lambda self, config, ctx, df: (built, ["s"], None, [])
     )
     monkeypatch.setattr("etl_spark_gradle_spark.plans.config.RunContext.create", mock.Mock())
     assert cli.main(["--pipeline", pipeline, "--explain"]) == 0

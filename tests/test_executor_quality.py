@@ -262,7 +262,8 @@ def test_skip_extract_count_enables_pushdown(spark, tmp_path):
     config = load_pipeline_yaml(str(p))
 
     ex = PipelineExecutor()
-    _, transformed, _, obs, _ = ex.build_plan(config, RunContext.create("t", spark))
+    ctx = RunContext.create("t", spark)
+    transformed, _, obs, _ = ex.build_plan(config, ctx, ex.extract(config, ctx)[1])
     assert obs is None
     buf = io.StringIO()
     with redirect_stdout(buf):

@@ -169,8 +169,8 @@ def test_quality_phase_spans_the_side_actions(spark, tmp_path, monkeypatch):
     seconds = {name: phase.seconds for name, phase in collector.phases.items()}
     assert seconds["load"] > 0
     assert seconds["quality"] >= dup_s
-    # the side actions overlap the plan and the load
-    assert seconds["quality"] >= seconds["plan"] + seconds["load"]
+    # the side actions start once the plan is built: they overlap the load
+    assert seconds["quality"] >= seconds["load"]
 
 
 def _assert_failed_cleanly(spark, tmp_path, config, blocker, threads_before):

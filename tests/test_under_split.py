@@ -51,8 +51,9 @@ def _physical(df) -> str:
 
 
 def _plan(spark, doc) -> str:
-    config = parse_pipeline_dict(doc)
-    return _physical(PipelineExecutor().build_plan(config, RunContext.create("t", spark))[1])
+    config, executor = parse_pipeline_dict(doc), PipelineExecutor()
+    ctx = RunContext.create("t", spark)
+    return _physical(executor.build_plan(config, ctx, executor.extract(config, ctx)[1])[0])
 
 
 def _round_robin(plan: str, n: int) -> int:
