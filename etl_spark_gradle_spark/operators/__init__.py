@@ -1,11 +1,15 @@
 """Transformation operators.
 
 Each operator is a pure function ``DataFrame -> DataFrame`` plus a thin
-``Transformer`` adapter carrying config validation, registered in
-``TRANSFORMER_REGISTRY`` by type string — preserving the reference's
-extension contract (``pipeline/TransformerRegistry.scala:13-19``,
-user registration at ``pipeline/ExtractorRegistry.scala:40-42``) without
-the ceremony.
+``Transformer`` adapter, registered in ``TRANSFORMER_REGISTRY`` by type
+string — preserving the reference's extension contract
+(``pipeline/TransformerRegistry.scala:13-19``, user registration at
+``pipeline/ExtractorRegistry.scala:40-42``) without the ceremony. Every
+built-in adapter subclasses ``base._BaseTransformer`` and supplies only
+``validate`` and ``_apply``; the base's ``transform`` validates first
+and raises ``TransformationError`` prefixed with the step's type, and
+its ``lineage_step`` writes ``type(k=v,...)``. A user transformer only
+needs ``transform`` and ``lineage_step``.
 
 This package exports lazily (PEP 562): importing one operator module —
 as every Arrow-batched worker function does when cloudpickle resolves

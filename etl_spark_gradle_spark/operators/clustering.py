@@ -59,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_spark_gradle_spark.operators.relational import TransformationError
+from etl_spark_gradle_spark.operators.relational import TransformationError, _BaseTransformer
 
 __all__ = [
     "kmeans",
@@ -432,7 +432,7 @@ def semantic_representatives(assigned: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-class KMeansTransformer:
+class KMeansTransformer(_BaseTransformer):
     """Registry adapter (``type: kmeans``). Options: ``idColumn``,
     ``vectorColumn`` (required), ``k`` (default 8), ``iterations``
     (default 3), ``scaleBits`` (default 20), ``representativesOnly``
@@ -460,12 +460,7 @@ class KMeansTransformer:
                 errors.append(f"kmeans {key} must be an integer")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "kmeans config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         seeding = {"firstk": "first_k", "first_k": "first_k",
                    "spread": "spread"}.get(
@@ -489,7 +484,3 @@ class KMeansTransformer:
         if str(opts.get("representativesOnly", "false")).lower() == "true":
             out = semantic_representatives(out, opts["idColumn"])
         return out
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"kmeans({opts})"

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_spark_gradle_spark.operators.relational import TransformationError
+from etl_spark_gradle_spark.operators.relational import TransformationError, _BaseTransformer
 from etl_spark_gradle_spark.operators.text import tokens
 
 __all__ = ["pmi_bigrams", "PmiTransformer"]
@@ -108,7 +108,7 @@ def pmi_bigrams(
     return out
 
 
-class PmiTransformer:
+class PmiTransformer(_BaseTransformer):
     """Registry adapter (``type: pmi``). Options: ``textColumn``
     (default text), ``minCount`` (default 2), ``topK`` (optional),
     ``lowercase`` true|false (default true)."""
@@ -128,12 +128,7 @@ class PmiTransformer:
             errors.append("minCount must be an integer")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "pmi config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         top_k = opts.get("topK")
         return pmi_bigrams(
@@ -143,7 +138,3 @@ class PmiTransformer:
             top_k=int(top_k) if top_k is not None else None,
             lowercase=str(opts.get("lowercase", "true")).lower() != "false",
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"pmi({opts})"

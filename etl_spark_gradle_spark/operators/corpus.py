@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from etl_spark_gradle_spark.options import parse_bool
 from etl_spark_gradle_spark.operators.relational import (
     TransformationError,
+    _BaseTransformer,
     _split_csv,
     broadcast_group_join,
 )
@@ -661,7 +662,7 @@ def cap_per_group(
     )
 
 
-class CapPerGroupTransformer:
+class CapPerGroupTransformer(_BaseTransformer):
     """Registry adapter (``type: cap_per_group``). Options:
     ``groupBy`` (comma list, required), ``maxRows`` (required),
     ``orderColumn`` (hash-rank key, required — must vary within each
@@ -688,12 +689,7 @@ class CapPerGroupTransformer:
             errors.append(f"column not in input schema: {oc}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "cap_per_group config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         groups = [c.strip() for c in opts["groupBy"].split(",") if c.strip()]
         return cap_per_group(
@@ -704,10 +700,6 @@ class CapPerGroupTransformer:
             salt=opts.get("salt", ""),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"cap_per_group({opts})"
-
 
 def _opt_int(opts: dict, key: str, default: int) -> int:
     try:
@@ -716,7 +708,7 @@ def _opt_int(opts: dict, key: str, default: int) -> int:
         raise TransformationError(f"{key} must be an integer: {opts.get(key)!r}")
 
 
-class ChunkTransformer:
+class ChunkTransformer(_BaseTransformer):
     """Registry adapter (``type: chunk``). Options: ``idColumn``,
     ``textColumn`` (default ``text``), ``chunkTokens`` (default 512),
     ``overlap`` (default 0)."""
@@ -739,10 +731,7 @@ class ChunkTransformer:
             errors.append(str(e))
         return ValidationResult.fail(*errors) if errors else ValidationResult.ok()
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError("chunk config invalid: " + "; ".join(result.errors))
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return chunk_documents(
             df,
@@ -752,12 +741,8 @@ class ChunkTransformer:
             overlap=_opt_int(opts, "overlap", 0),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"chunk({opts})"
 
-
-class PackTransformer:
+class PackTransformer(_BaseTransformer):
     """Registry adapter (``type: pack``). Options: ``keyColumn``,
     ``tokenCountColumn``, ``maxTokens``, optional ``shards`` (default
     64) / ``shardColumn``."""
@@ -782,10 +767,7 @@ class PackTransformer:
             errors.append(str(e))
         return ValidationResult.fail(*errors) if errors else ValidationResult.ok()
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError("pack config invalid: " + "; ".join(result.errors))
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return pack_sequences(
             df,
@@ -796,12 +778,8 @@ class PackTransformer:
             shard_col=opts.get("shardColumn"),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"pack({opts})"
 
-
-class TokenFrequencyTransformer:
+class TokenFrequencyTransformer(_BaseTransformer):
     """Registry adapter (``type: token_frequency``). Options:
     ``textColumn`` (default ``text``), ``minCount`` (default 1),
     ``topK`` (optional), ``lowercase`` (default false)."""
@@ -822,12 +800,7 @@ class TokenFrequencyTransformer:
             errors.append(str(e))
         return ValidationResult.fail(*errors) if errors else ValidationResult.ok()
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "token_frequency config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return token_frequency(
             df,
@@ -836,10 +809,6 @@ class TokenFrequencyTransformer:
             top_k=_opt_int(opts, "topK", 0) if "topK" in opts else None,
             lowercase=str(opts.get("lowercase", "false")).lower() == "true",
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"token_frequency({opts})"
 
 
 def mix_to_target(
@@ -899,7 +868,7 @@ def mix_to_target(
     )
 
 
-class MixTransformer:
+class MixTransformer(_BaseTransformer):
     """Registry adapter (``type: mix``). Options: ``groupColumn``,
     ``keyColumn``, ``targets: "web:0.4,code:0.3,books:0.3"``, optional
     ``salt``."""
@@ -921,12 +890,7 @@ class MixTransformer:
                 errors.append(f"cannot parse targets: {opts['targets']!r}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "MixTransformer config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx):
         opts = config.options
         return mix_to_target(
             df,
@@ -936,12 +900,8 @@ class MixTransformer:
             salt=opts.get("salt", ""),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"mix({opts})"
 
-
-class WeightedSampleTransformer:
+class WeightedSampleTransformer(_BaseTransformer):
     """Registry adapter (``type: weighted_sample``). Options:
     ``keyColumn``, ``weightColumn``, ``targetCount``, optional
     ``salt``."""
@@ -959,12 +919,7 @@ class WeightedSampleTransformer:
             errors.append("weighted_sample requires integer 'targetCount' >= 0")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "weighted_sample config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx):
         opts = config.options
         return weighted_sample(
             df,
@@ -974,12 +929,8 @@ class WeightedSampleTransformer:
             salt=opts.get("salt", ""),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"weighted_sample({opts})"
 
-
-class HashSampleTransformer:
+class HashSampleTransformer(_BaseTransformer):
     """Registry adapter (``type: hash_sample``). Options: ``keyColumn``,
     either ``fraction`` or ``fractions: "src0:0.5,src1:0.2"`` +
     ``strataColumn`` (+ optional ``defaultFraction``), optional
@@ -1026,12 +977,7 @@ class HashSampleTransformer:
                 errors.append(f"fraction must be a number: {opts.get('fraction')!r}")
         return ValidationResult.fail(*errors) if errors else ValidationResult.ok()
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "hash_sample config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         if "fraction" in opts:
             return hash_sample(
@@ -1048,10 +994,6 @@ class HashSampleTransformer:
             salt=opts.get("salt", ""),
             default_fraction=float(opts.get("defaultFraction", 0.0)),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"hash_sample({opts})"
 
 
 def balance_classes(
@@ -1142,7 +1084,7 @@ def balance_classes(
     )
 
 
-class BalanceClassesTransformer:
+class BalanceClassesTransformer(_BaseTransformer):
     """Registry adapter (``type: balance_classes``). Options:
     ``classBy`` (comma list, required), ``orderColumn`` (required —
     per-row key varying within each class), ``target`` (optional
@@ -1171,12 +1113,7 @@ class BalanceClassesTransformer:
             errors.append(f"mode must be down|up, got '{opts['mode']}'")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "balance_classes config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return balance_classes(
             df,
@@ -1186,10 +1123,6 @@ class BalanceClassesTransformer:
             salt=opts.get("salt", ""),
             mode=opts.get("mode", "down"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"balance_classes({opts})"
 
 
 def decontaminate(
@@ -1254,9 +1187,6 @@ def decontaminate(
     Reference parity: beyond-reference surface (SURVEY.md §2 — the
     reference has no corpus operators), same family as dedup/mix."""
     from etl_spark_gradle_spark.operators.dedup import token_shingles
-    from etl_spark_gradle_spark.operators.relational import (
-        TransformationError,
-    )
 
     if int(n) < 1:
         raise TransformationError("decontaminate requires n >= 1")
@@ -1316,7 +1246,7 @@ def decontaminate(
     return train_df.join(report.select(id_col), id_col, "left_anti")
 
 
-class DecontaminateTransformer:
+class DecontaminateTransformer(_BaseTransformer):
     """Registry adapter (``type: decontaminate``): screens the
     pipeline frame (the TRAINING corpus) against a registered view
     (the EVAL set). Options: ``evalView`` (required — name registered
@@ -1354,17 +1284,9 @@ class DecontaminateTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        from etl_spark_gradle_spark.operators.relational import (
-            TransformationError,
-        )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         from etl_spark_gradle_spark.options import parse_bool
 
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "decontaminate config invalid: " + "; ".join(result.errors)
-            )
         opts = config.options
         try:
             eval_df = ctx.spark.table(opts["evalView"])
@@ -1385,10 +1307,6 @@ class DecontaminateTransformer:
             mode=opts.get("mode", "report"),
             broadcast_eval=parse_bool(opts.get("broadcastEval", True)),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"decontaminate({opts})"
 
 
 def negative_sample(
@@ -1547,7 +1465,7 @@ def negative_sample(
     return out
 
 
-class NegativeSampleTransformer:
+class NegativeSampleTransformer(_BaseTransformer):
     """Registry adapter (``type: negative_sample``). Options:
     ``keyColumn`` (required), ``candidatesTable`` (a ``views:`` entry,
     required), ``candidateColumn`` (required), ``k`` (default 5),
@@ -1578,12 +1496,7 @@ class NegativeSampleTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "negative_sample config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         cands = ctx.spark.table(opts["candidatesTable"])
         return negative_sample(
@@ -1599,12 +1512,8 @@ class NegativeSampleTransformer:
             output_col=opts.get("outputColumn", "negative"),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"negative_sample({opts})"
 
-
-class DsirTransformer:
+class DsirTransformer(_BaseTransformer):
     """Registry adapter (``type: dsir``): scores the pipeline frame
     (the TRAINING corpus) against a registered view (the TARGET
     corpus) with :func:`dsir_weights` and ANNOTATES it — the weights
@@ -1643,14 +1552,9 @@ class DsirTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         from etl_spark_gradle_spark.options import parse_bool
 
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "dsir config invalid: " + "; ".join(result.errors)
-            )
         opts = config.options
         try:
             target_df = ctx.spark.table(opts["targetView"])
@@ -1669,9 +1573,3 @@ class DsirTransformer:
             smoothing=float(opts.get("smoothing", 1.0)),
         )
         return df.join(weights, opts["idColumn"], "left")
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(
-            f"{k}={v}" for k, v in sorted(config.options.items())
-        )
-        return f"dsir({opts})"

@@ -38,6 +38,7 @@ from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_spark_gradle_spark.operators.base import TransformationError, _BaseTransformer
 from etl_spark_gradle_spark.operators.text import fingerprint
 from etl_spark_gradle_spark.plans.config import ValidationResult
 
@@ -330,10 +331,6 @@ def containment_pairs(
     deflated by frequent shingles that only the numerator lost
     (ADVICE r10). ``max_shingle_df=None`` is untouched."""
     if not 0.0 < float(threshold) <= 1.0:
-        from etl_spark_gradle_spark.operators.relational import (
-            TransformationError,
-        )
-
         raise TransformationError(
             "containment_pairs requires 0 < threshold <= 1"
         )
@@ -1042,7 +1039,7 @@ def simhash(text: Column | str, bits: int = 64) -> Column:
     return _simhash_sig_udf(bits)(hashes)
 
 
-class ContaminationTransformer:
+class ContaminationTransformer(_BaseTransformer):
     """Registry adapter (``type: contamination``): flag corpus docs whose
     token n-grams overlap a benchmark set registered as a temp view
     (declare it under ``views:``). Options: ``benchmarkTable`` (req),
@@ -1066,14 +1063,7 @@ class ContaminationTransformer:
             errors.append(f"unsupported action: {opts['action']}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            from etl_spark_gradle_spark.operators.relational import TransformationError
-
-            raise TransformationError(
-                "contamination config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         tc = opts.get("textColumn", "text")
         flags = contamination_check(
@@ -1092,12 +1082,8 @@ class ContaminationTransformer:
             return out.filter(~F.col("contaminated")).drop("matched", "contaminated")
         return out
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"contamination({opts})"
 
-
-class DedupTransformer:
+class DedupTransformer(_BaseTransformer):
     """Registry adapter for dedup (``type: dedup``).
 
     ``strategy: exact`` (default) — options ``keys`` (comma list) or
@@ -1214,17 +1200,11 @@ class DedupTransformer:
                 return ValidationResult.fail(*errors)
         return ValidationResult.ok()
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            from etl_spark_gradle_spark.operators.relational import TransformationError
-
-            raise TransformationError("dedup config invalid: " + "; ".join(result.errors))
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         keys = [k.strip() for k in opts.get("keys", "").split(",") if k.strip()]
         if df.isStreaming:
             from etl_spark_gradle_spark import streaming
-            from etl_spark_gradle_spark.operators.relational import TransformationError
 
             if opts.get("strategy", "exact").lower() != "exact" or not keys:
                 raise TransformationError("streaming dedup requires 'keys' with strategy exact")
@@ -1291,10 +1271,6 @@ class DedupTransformer:
             # the other operators' output-column-collision errors).
             clash = [c for c in ("n_lines", "kept_lines") if c in df.columns]
             if clash:
-                from etl_spark_gradle_spark.operators.relational import (
-                    TransformationError,
-                )
-
                 raise TransformationError(
                     f"dedup strategy=lines emits count columns {clash} "
                     "which already exist in the input — rename them "
@@ -1327,10 +1303,6 @@ class DedupTransformer:
             content_col=opts.get("contentColumn"),
             tiebreak_col=opts.get("tiebreakColumn"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"dedup({opts})"
 
 
 def simhash_candidates(

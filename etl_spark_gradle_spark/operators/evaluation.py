@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from etl_spark_gradle_spark.operators.relational import (
     TransformationError,
+    _BaseTransformer,
     _split_csv,
 )
 
@@ -685,7 +686,7 @@ def weighted_kappa(
     )
 
 
-class EvaluationTransformer:
+class EvaluationTransformer(_BaseTransformer):
     """Registry adapter (``type: evaluation``). Options:
     ``operation`` auc|classification_report|lift_table|cohens_kappa,
     ``scoreColumn``/``labelColumn`` (auc, lift_table),
@@ -807,12 +808,7 @@ class EvaluationTransformer:
             *errors
         )
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "evaluation config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         group_by = list(_split_csv(opts.get("groupBy"))) or None
         op = opts["operation"]
@@ -941,12 +937,6 @@ class EvaluationTransformer:
         return cohens_kappa(
             df, opts["raterAColumn"], opts["raterBColumn"], group_by
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(
-            f"{k}={v}" for k, v in sorted(config.options.items())
-        )
-        return f"evaluation({opts})"
 
 
 def isotonic_calibration(

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_spark_gradle_spark.options import parse_bool
-from etl_spark_gradle_spark.operators.relational import TransformationError
+from etl_spark_gradle_spark.operators.relational import TransformationError, _BaseTransformer
 
 __all__ = [
     "funnel_steps",
@@ -210,7 +210,7 @@ def transition_matrix(
     )
 
 
-class FunnelTransformer:
+class FunnelTransformer(_BaseTransformer):
     """Registry adapter (``type: funnel``). Options: ``userColumn``,
     ``typeColumn``, ``timeColumn``, ``steps`` (csv, ordered),
     ``withinSeconds`` (optional), ``output`` counts|steps."""
@@ -233,12 +233,7 @@ class FunnelTransformer:
             errors.append("funnel output must be 'counts' or 'steps'")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "funnel config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         from etl_spark_gradle_spark.operators.relational import _split_csv
 
         opts = config.options
@@ -253,12 +248,8 @@ class FunnelTransformer:
             within_seconds=float(within) if within is not None else None,
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"funnel({opts})"
 
-
-class CohortTransformer:
+class CohortTransformer(_BaseTransformer):
     """Registry adapter (``type: cohort``). Options: ``userColumn``,
     ``timeColumn``, ``origin`` (date), ``periodDays``."""
 
@@ -274,12 +265,7 @@ class CohortTransformer:
                 errors.append(f"{key} not in input schema: {col}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "cohort config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return cohort_retention(
             df,
@@ -289,12 +275,8 @@ class CohortTransformer:
             period_days=int(opts.get("periodDays", 7)),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"cohort({opts})"
 
-
-class TransitionsTransformer:
+class TransitionsTransformer(_BaseTransformer):
     """Registry adapter (``type: transitions``). Options: ``userColumn``,
     ``typeColumn``, ``timeColumn``, ``tiebreakColumn`` (optional)."""
 
@@ -310,12 +292,7 @@ class TransitionsTransformer:
                 errors.append(f"{key} not in input schema: {col}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "transitions config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return transition_matrix(
             df,
@@ -324,10 +301,6 @@ class TransitionsTransformer:
             opts["timeColumn"],
             tiebreak_col=opts.get("tiebreakColumn"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"transitions({opts})"
 
 
 def market_basket_pairs(
@@ -487,7 +460,7 @@ def association_rules(
     return out
 
 
-class MarketBasketTransformer:
+class MarketBasketTransformer(_BaseTransformer):
     """Registry adapter (``type: market_basket``). Options:
     ``basketColumn``, ``itemColumn``, ``minSupport``, ``topK``,
     ``rules`` (true → emit directed association rules with
@@ -505,12 +478,7 @@ class MarketBasketTransformer:
                 errors.append(f"{key} not in input schema: {col}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "market_basket config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         top_k = opts.get("topK")
         fn = association_rules if parse_bool(opts.get("rules")) else market_basket_pairs
@@ -521,10 +489,6 @@ class MarketBasketTransformer:
             min_support=int(opts.get("minSupport", 1)),
             top_k=int(top_k) if top_k is not None else None,
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"market_basket({opts})"
 
 
 def top_paths(
@@ -616,7 +580,7 @@ def top_paths(
     return ranked
 
 
-class TopPathsTransformer:
+class TopPathsTransformer(_BaseTransformer):
     """Registry adapter (``type: top_paths``). Options: ``userColumn``,
     ``typeColumn``, ``timeColumn``, ``tiebreakColumn`` (all required),
     ``maxSteps`` (default 5), ``k`` (default 20), ``separator``."""
@@ -633,12 +597,7 @@ class TopPathsTransformer:
                 errors.append(f"{opt} not in input schema: {col}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "top_paths config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return top_paths(
             df,
@@ -650,10 +609,6 @@ class TopPathsTransformer:
             k=int(opts.get("k", 20)),
             sep=opts.get("separator", ">"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"top_paths({opts})"
 
 
 def rolling_active(
@@ -729,7 +684,7 @@ def rolling_active(
     )
 
 
-class RollingActiveTransformer:
+class RollingActiveTransformer(_BaseTransformer):
     """Registry adapter (``type: rolling_active``). Options:
     ``userColumn``, ``timeColumn`` (required), ``windowDays`` (default
     7), ``outputColumn`` (default ``active_users``)."""
@@ -753,12 +708,7 @@ class RollingActiveTransformer:
             )
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "rolling_active config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return rolling_active(
             df,
@@ -767,10 +717,6 @@ class RollingActiveTransformer:
             window_days=int(opts.get("windowDays", 7)),
             out_col=opts.get("outputColumn", "active_users"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"rolling_active({opts})"
 
 
 def _time_units(df: DataFrame, time_col: str):
@@ -935,7 +881,7 @@ def debounce(
     return base.where(keep).drop("_tn", "_pv")
 
 
-class SessionizeTransformer:
+class SessionizeTransformer(_BaseTransformer):
     """Registry adapter (``type: sessionize``). Options:
     ``userColumn``, ``timeColumn``, ``tiebreakColumn`` (all required),
     ``gapSeconds`` (default 1800), ``output`` events|sessions."""
@@ -971,12 +917,7 @@ class SessionizeTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "sessionize config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return sessionize(
             df,
@@ -987,12 +928,8 @@ class SessionizeTransformer:
             output=opts.get("output", "events"),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"sessionize({opts})"
 
-
-class DebounceTransformer:
+class DebounceTransformer(_BaseTransformer):
     """Registry adapter (``type: debounce``). Options: ``keyColumns``
     csv (required), ``timeColumn``, ``tiebreakColumn`` (required),
     ``gapSeconds`` (default 60)."""
@@ -1027,14 +964,9 @@ class DebounceTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         from etl_spark_gradle_spark.operators.relational import _split_csv
 
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "debounce config invalid: " + "; ".join(result.errors)
-            )
         opts = config.options
         return debounce(
             df,
@@ -1043,7 +975,3 @@ class DebounceTransformer:
             gap_seconds=float(opts.get("gapSeconds", 60)),
             tiebreak_col=opts["tiebreakColumn"],
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"debounce({opts})"

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from etl_spark_gradle_spark.operators.relational import (
     TransformationError,
+    _BaseTransformer,
     pin_bounded,
 )
 
@@ -143,7 +144,7 @@ def pagerank(
     )
 
 
-class PagerankTransformer:
+class PagerankTransformer(_BaseTransformer):
     """Registry adapter (``type: pagerank``). Options: ``srcColumn``,
     ``dstColumn`` (required), ``damping`` (default 0.85, hundredths
     precision), ``iterations`` (default 5)."""
@@ -171,12 +172,7 @@ class PagerankTransformer:
             errors.append("pagerank iterations must be an integer")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "pagerank config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return pagerank(
             df,
@@ -185,10 +181,6 @@ class PagerankTransformer:
             damping=float(opts.get("damping", 0.85)),
             iterations=int(opts.get("iterations", 5)),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"pagerank({opts})"
 
 
 def triangle_count(
@@ -283,7 +275,7 @@ def triangle_count(
     )
 
 
-class TriangleCountTransformer:
+class TriangleCountTransformer(_BaseTransformer):
     """Registry adapter (``type: triangle_count``). Options:
     ``srcColumn``, ``dstColumn`` (required), ``perVertex``
     (default true)."""
@@ -300,12 +292,7 @@ class TriangleCountTransformer:
                 errors.append(f"column not in input schema: {opts[key]}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        res = self.validate(df, config)
-        if not res.is_valid:
-            raise TransformationError(
-                "TriangleCountTransformer config invalid: " + "; ".join(res.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return triangle_count(
             df,
@@ -313,10 +300,6 @@ class TriangleCountTransformer:
             opts["dstColumn"],
             per_vertex=str(opts.get("perVertex", "true")).lower() == "true",
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"triangle_count({opts})"
 
 
 def bfs_distances(
@@ -390,7 +373,7 @@ def bfs_distances(
     return dist
 
 
-class BfsDistancesTransformer:
+class BfsDistancesTransformer(_BaseTransformer):
     """Registry adapter (``type: bfs``). Options: ``srcColumn``,
     ``dstColumn``, ``seedValues`` (csv of seed node ids — or use a
     ``views:``-registered seed table via ``seedView``/``seedColumn``),
@@ -417,14 +400,9 @@ class BfsDistancesTransformer:
             errors.append("bfs maxHops must be an integer")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
+    def _apply(self, df, config, ctx):
         from etl_spark_gradle_spark.operators.relational import _split_csv
 
-        res = self.validate(df, config)
-        if not res.is_valid:
-            raise TransformationError(
-                "bfs config invalid: " + "; ".join(res.errors)
-            )
         opts = config.options
         spark = df.sparkSession
         if opts.get("seedView"):
@@ -445,7 +423,3 @@ class BfsDistancesTransformer:
             max_hops=int(opts.get("maxHops", 3)),
             directed=str(opts.get("directed", "false")).lower() == "true",
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"bfs({opts})"

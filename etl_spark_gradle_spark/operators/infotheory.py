@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from etl_spark_gradle_spark.operators.relational import (
     TransformationError,
+    _BaseTransformer,
     _split_csv,
 )
 from etl_spark_gradle_spark.operators.stats import _two_sample_counts
@@ -511,7 +512,7 @@ def psi_drift(
     )
 
 
-class InfoTheoryTransformer:
+class InfoTheoryTransformer(_BaseTransformer):
     """Registry adapter (``type: infotheory``). Options: ``operation``
     entropy|mutual_information|theil_u (two-sample divergences route
     through ``type: drift`` with ``statistic: js``/``kl``); entropy
@@ -550,12 +551,7 @@ class InfoTheoryTransformer:
             )
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "infotheory config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         if opts.get("operation", "entropy") == "entropy":
             return category_entropy(
@@ -571,7 +567,3 @@ class InfoTheoryTransformer:
             opts["yColumn"],
             per_pair=str(opts.get("perPair", "false")).lower() == "true",
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"infotheory({opts})"

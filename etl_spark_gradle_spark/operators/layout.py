@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_spark_gradle_spark.operators.base import TransformationError, _BaseTransformer
+
 __all__ = ["scale_to_grid", "z_value", "zorder", "ZorderTransformer"]
 
 
@@ -130,7 +132,7 @@ def zorder(
     return out.sortWithinPartitions("__z").drop("__z")
 
 
-class ZorderTransformer:
+class ZorderTransformer(_BaseTransformer):
     """Registry adapter (``type: zorder``): re-cluster the pipeline
     frame mid-flight (options ``columns`` csv, ``bits``,
     ``partitions``) — for when the clustering must happen before a
@@ -149,14 +151,7 @@ class ZorderTransformer:
                 errors.append(f"zorder column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            from etl_spark_gradle_spark.operators.relational import TransformationError
-
-            raise TransformationError(
-                "ZorderTransformer config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return zorder(
             df,
@@ -164,10 +159,6 @@ class ZorderTransformer:
             bits=int(opts.get("bits", "16")),
             num_partitions=int(opts["partitions"]) if opts.get("partitions") else None,
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"zorder({opts})"
 
 
 def parquet_stats(spark, path: str, columns: list[str] | None = None):
@@ -203,7 +194,6 @@ def parquet_stats(spark, path: str, columns: list[str] | None = None):
         StructType,
     )
 
-    from etl_spark_gradle_spark.operators.relational import TransformationError
     from etl_spark_gradle_spark.sources.incremental import list_data_files
 
     files = [f["path"] for f in list_data_files(spark, path)]

@@ -33,6 +33,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_spark_gradle_spark.operators.base import TransformationError, _BaseTransformer
+
 _WS = r"[ \t\n\f\r]+"
 
 
@@ -148,7 +150,7 @@ def score_with_bigram_lm(
     )
 
 
-class LmScoreTransformer:
+class LmScoreTransformer(_BaseTransformer):
     """Registry adapter (``type: lm_score``): train on the input frame
     itself or a reference ``trainPath`` parquet, annotate each document
     with the LM evidence + perplexity. Options: ``idColumn`` (required),
@@ -172,14 +174,7 @@ class LmScoreTransformer:
             errors.append("lm_score action must be annotate|replace")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        from etl_spark_gradle_spark.operators.relational import TransformationError
-
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "lm_score config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         ic = opts["idColumn"]
         tc = opts.get("textColumn", "text")
@@ -192,7 +187,3 @@ class LmScoreTransformer:
         if opts.get("action", "annotate") == "replace":
             return scores
         return df.join(scores, ic, "left")
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"lm_score({opts})"

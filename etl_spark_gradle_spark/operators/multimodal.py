@@ -56,6 +56,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from etl_spark_gradle_spark.operators.base import TransformationError, _BaseTransformer
+
 # Magic-number prefixes → format tag (hex of the payload's first bytes).
 _MAGIC: dict[str, str] = {
     "89504E47": "png",
@@ -565,7 +567,7 @@ def sample_frames(
     return src.select(id_col, binary_col).mapInPandas(batches, FRAME_SAMPLE_SCHEMA)
 
 
-class MultimodalTransformer:
+class MultimodalTransformer(_BaseTransformer):
     """Registry adapter (``type: multimodal``). Options:
 
     - ``operation`` (required): ``metadata`` | ``decode_image`` |
@@ -603,14 +605,7 @@ class MultimodalTransformer:
                 errors.append(f"idColumn not in input schema: {ic}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            from etl_spark_gradle_spark.operators.relational import TransformationError
-
-            raise TransformationError(
-                "multimodal config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         op = opts["operation"].lower()
         bc = opts.get("binaryColumn", "content")
@@ -640,10 +635,6 @@ class MultimodalTransformer:
                 max_frames=int(opts.get("maxFrames", 8)),
             )
         return embed_media(df, id_col=ic, binary_col=bc, dim=int(opts.get("dim", 16)))
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"multimodal({opts})"
 
 
 RESIZE_SCHEMA = StructType(

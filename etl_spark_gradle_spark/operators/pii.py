@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_spark_gradle_spark.operators.relational import TransformationError
+from etl_spark_gradle_spark.operators.relational import TransformationError, _BaseTransformer
 
 # Ordered dict: redaction applies in this order, so e.g. the digits of an
 # already-redacted email can't later match the phone pattern.
@@ -82,7 +82,7 @@ def redact_pii(
     return df.withColumn(out_col or text_col, c)
 
 
-class PiiTransformer:
+class PiiTransformer(_BaseTransformer):
     """Registry adapter (``type: pii``). Options: ``textColumn``
     (default ``text``), ``kinds`` (csv subset of ``email,ipv4,phone``,
     default all), ``mode``:
@@ -117,12 +117,7 @@ class PiiTransformer:
         raw = config.options.get("kinds", "")
         return [k.strip() for k in raw.split(",") if k.strip()] or list(PII_PATTERNS)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            from etl_spark_gradle_spark.operators.relational import TransformationError
-
-            raise TransformationError("pii config invalid: " + "; ".join(result.errors))
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         tc = opts.get("textColumn", "text")
         kinds = self._kinds(config)
@@ -135,10 +130,6 @@ class PiiTransformer:
         for kind in kinds:
             total = total + pii_count(tc, kind)
         return df.filter(total == 0)
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"pii({opts})"
 
 
 def k_anonymity(
@@ -442,7 +433,7 @@ def t_closeness(
     )
 
 
-class KAnonymityTransformer:
+class KAnonymityTransformer(_BaseTransformer):
     """Registry adapter (``type: k_anonymity``). Options:
     ``quasiIdentifiers`` csv (required), ``k`` (default 5),
     ``output`` violations|summary|annotate (default violations)."""
@@ -478,14 +469,9 @@ class KAnonymityTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         from etl_spark_gradle_spark.operators.relational import _split_csv
 
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "k_anonymity config invalid: " + "; ".join(result.errors)
-            )
         opts = config.options
         return k_anonymity(
             df,
@@ -494,12 +480,8 @@ class KAnonymityTransformer:
             output=opts.get("output", "violations"),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"k_anonymity({opts})"
 
-
-class LDiversityTransformer:
+class LDiversityTransformer(_BaseTransformer):
     """Registry adapter (``type: l_diversity``). Options:
     ``quasiIdentifiers`` csv (required), ``sensitiveColumn``
     (required), ``l`` (default 2), ``output`` violations|summary
@@ -536,14 +518,9 @@ class LDiversityTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         from etl_spark_gradle_spark.operators.relational import _split_csv
 
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "l_diversity config invalid: " + "; ".join(result.errors)
-            )
         opts = config.options
         return l_diversity(
             df,
@@ -553,12 +530,8 @@ class LDiversityTransformer:
             output=opts.get("output", "violations"),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"l_diversity({opts})"
 
-
-class TClosenessTransformer:
+class TClosenessTransformer(_BaseTransformer):
     """Registry adapter (``type: t_closeness``). Options:
     ``quasiIdentifiers`` csv (required), ``sensitiveColumn``
     (required), ``t`` (default 0.2), ``distance`` emd|tv (default
@@ -599,14 +572,9 @@ class TClosenessTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         from etl_spark_gradle_spark.operators.relational import _split_csv
 
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "t_closeness config invalid: " + "; ".join(result.errors)
-            )
         opts = config.options
         return t_closeness(
             df,
@@ -616,7 +584,3 @@ class TClosenessTransformer:
             distance=opts.get("distance", "emd"),
             output=opts.get("output", "violations"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"t_closeness({opts})"

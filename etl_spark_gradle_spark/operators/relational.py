@@ -23,17 +23,15 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_spark_gradle_spark.operators.base import (
+    TransformationError,
+    _BaseTransformer,
+)
 from etl_spark_gradle_spark.plans.config import (
     AggregateExpr,
-    RunContext,
     TransformationConfig,
     ValidationResult,
 )
-
-
-class TransformationError(ValueError):
-    """Typed transform failure
-    (parity: ``core/TransformationException.scala:10-14``)."""
 
 
 # ---------------------------------------------------------------------------
@@ -1299,7 +1297,7 @@ def flatten_structs(
     return df.select(*cols)
 
 
-class FlattenTransformer:
+class FlattenTransformer(_BaseTransformer):
     """Registry adapter (``type: flatten``). Options: ``separator``
     (default ``_``), ``maxDepth``."""
 
@@ -1311,21 +1309,12 @@ class FlattenTransformer:
             return ValidationResult.fail("maxDepth must be an integer")
         return ValidationResult.ok()
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "FlattenTransformer config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         return flatten_structs(
             df,
             separator=config.options.get("separator", "_"),
             max_depth=int(config.options.get("maxDepth", "10")),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"flatten({opts})"
 
 
 def quantile_filter(
@@ -1366,7 +1355,7 @@ def quantile_filter(
     return df.filter(cond)
 
 
-class QuantileFilterTransformer:
+class QuantileFilterTransformer(_BaseTransformer):
     """Registry adapter (``type: quantile_filter``). Options:
     ``column``, ``lowerQuantile``, ``upperQuantile``, ``keepNulls``."""
 
@@ -1384,12 +1373,7 @@ class QuantileFilterTransformer:
             errors.append("lowerQuantile/upperQuantile must be numeric")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "QuantileFilterTransformer config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return quantile_filter(
             df,
@@ -1398,10 +1382,6 @@ class QuantileFilterTransformer:
             upper_q=float(opts.get("upperQuantile", "1")),
             keep_nulls=opts.get("keepNulls", "").lower() in ("true", "1", "yes"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"quantile_filter({opts})"
 
 
 def sql_transform(
@@ -1437,36 +1417,6 @@ def _split_csv(value: str | None) -> list[str]:
     survive in orderBy/partitionBy/selectColumns (e.g.
     ``coalesce(a, b) DESC``)."""
     return [c.strip() for c in split_top_level(value or "") if c.strip()]
-
-
-class _BaseTransformer:
-    """Contract (parity: ``core/DataTransformer.scala:36-40``): validate
-    first, throw typed exception on bad config, return a lazy DataFrame."""
-
-    def validate(self, df: DataFrame, config: TransformationConfig) -> ValidationResult:
-        raise NotImplementedError
-
-    def transform(
-        self, df: DataFrame, config: TransformationConfig, ctx: RunContext
-    ) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                f"{type(self).__name__} config invalid: " + "; ".join(result.errors)
-            )
-        return self._apply(df, config, ctx)
-
-    def _apply(
-        self, df: DataFrame, config: TransformationConfig, ctx: RunContext
-    ) -> DataFrame:
-        raise NotImplementedError
-
-    def lineage_step(self, config: TransformationConfig) -> str:
-        """Human-readable lineage chain entry (parity:
-        ``transformer/FilterTransformer.scala:77-102`` format
-        ``"filter(condition=age > 30)"``)."""
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"{config.type}({opts})"
 
 
 class FilterTransformer(_BaseTransformer):

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from etl_spark_gradle_spark.operators.relational import (
     TransformationError,
+    _BaseTransformer,
     _split_csv,
 )
 from etl_spark_gradle_spark.plans.config import ValidationResult
@@ -821,7 +822,7 @@ def cms_join_cardinality(
     return per_d.agg(F.min("_ip").cast("long").alias(estimate_col))
 
 
-class SketchTransformer:
+class SketchTransformer(_BaseTransformer):
     """Registry adapter (``type: sketch``).
 
     ``strategy: build`` (default) — options ``column`` (required),
@@ -923,12 +924,7 @@ class SketchTransformer:
             )
         return ValidationResult.ok()
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "sketch config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         group_by = _split_csv(opts.get("groupBy"))
         keep = str(opts.get("keepSketch", "false")).lower() == "true"
@@ -997,7 +993,3 @@ class SketchTransformer:
         lg_k = int(opts.get("lgK", DEFAULT_LG_K))
         built = build_distinct_sketch(df, group_by, opts["column"], lg_k=lg_k)
         return built if keep else built.drop("sketch")
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"sketch({opts})"

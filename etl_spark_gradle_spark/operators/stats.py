@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from etl_spark_gradle_spark.operators.relational import (
     TransformationError,
+    _BaseTransformer,
     _split_csv,
     broadcast_group_join,
 )
@@ -4653,7 +4654,7 @@ def discretize(
     return joined.withColumn(out, bin_expr.cast("int")).drop("_edges")
 
 
-class DiscretizeTransformer:
+class DiscretizeTransformer(_BaseTransformer):
     """Registry adapter (``type: discretize``). Options: ``column``
     (required), ``bins`` (default 10), ``mode`` equal_freq|equal_width,
     ``groupBy`` csv, ``outputColumn``."""
@@ -4680,12 +4681,7 @@ class DiscretizeTransformer:
                 errors.append(f"group column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        res = self.validate(df, config)
-        if not res.is_valid:
-            raise TransformationError(
-                "DiscretizeTransformer config invalid: " + "; ".join(res.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return discretize(
             df,
@@ -4696,12 +4692,8 @@ class DiscretizeTransformer:
             output_col=opts.get("outputColumn"),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"discretize({opts})"
 
-
-class DriftTransformer:
+class DriftTransformer(_BaseTransformer):
     """Registry adapter (``type: drift``): compares the pipeline frame
     against a registered view. Options: ``otherView`` (required — name
     registered under ``views:``) plus EXACTLY ONE of
@@ -4765,12 +4757,7 @@ class DriftTransformer:
                 errors.append("drift 'bins' must be an integer >= 2")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "drift config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         try:
             other = ctx.spark.table(opts["otherView"])
@@ -4835,10 +4822,6 @@ class DriftTransformer:
                 smoothing=float(opts.get("smoothing", 0.5)),
             )
         return category_drift(df, other, opts["categoryColumn"])
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"drift({opts})"
 
 
 def cochran_q(
@@ -5324,7 +5307,7 @@ def cohens_d(
     )
 
 
-class StatsTransformer:
+class StatsTransformer(_BaseTransformer):
     """Registry adapter (``type: stats``). Options: ``operation``
     correlation|linear_fit|zscore|quantiles|mad_outliers|ecdf|
     quantile_clip|trimmed_mean|impute|multiple_regression|benford|
@@ -5706,12 +5689,7 @@ class StatsTransformer:
                 errors.append(f"column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "stats config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         from etl_spark_gradle_spark.operators.relational import _split_csv
 
         opts = config.options
@@ -5977,12 +5955,8 @@ class StatsTransformer:
             threshold=float(opts.get("threshold", 3.0)),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"stats({opts})"
 
-
-class QuantileNormalizeTransformer:
+class QuantileNormalizeTransformer(_BaseTransformer):
     """Registry adapter (``type: quantile_normalize``). Options:
     ``valueColumn`` (required), ``referenceTable`` (a ``views:``
     entry, required), ``referenceColumn`` (defaults to
@@ -6014,17 +5988,7 @@ class QuantileNormalizeTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df, config, ctx):
-        from etl_spark_gradle_spark.operators.relational import (
-            TransformationError,
-        )
-
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "quantile_normalize config invalid: "
-                + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         ref = ctx.spark.table(opts["referenceTable"])
         return quantile_normalize(
@@ -6034,9 +5998,3 @@ class QuantileNormalizeTransformer:
             opts.get("referenceColumn", opts["valueColumn"]),
             out_col=opts.get("outputColumn"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(
-            f"{k}={v}" for k, v in sorted(config.options.items())
-        )
-        return f"quantile_normalize({opts})"

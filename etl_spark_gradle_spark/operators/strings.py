@@ -37,7 +37,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_spark_gradle_spark.operators.relational import TransformationError, estimated_bytes
+from etl_spark_gradle_spark.operators.relational import (
+    TransformationError,
+    _BaseTransformer,
+    estimated_bytes,
+)
 
 __all__ = ["edit_distance_join", "py_edit_distance"]
 
@@ -199,7 +203,7 @@ def py_edit_distance(a: str, b: str) -> int:
     return prev[-1]
 
 
-class EditJoinTransformer:
+class EditJoinTransformer(_BaseTransformer):
     """Registry adapter (``type: edit_join``): self-join the pipeline
     frame's ``stringColumn`` (or join against ``rightTable``'s
     ``rightStringColumn``) within ``maxDistance`` edits. Output is the
@@ -219,12 +223,7 @@ class EditJoinTransformer:
             errors.append("maxDistance must be an integer >= 1")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "edit_join config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         right = None
         if opts.get("rightTable"):
@@ -236,7 +235,3 @@ class EditJoinTransformer:
             right_string_col=opts.get("rightStringColumn"),
             max_distance=int(opts.get("maxDistance", 2)),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"edit_join({opts})"

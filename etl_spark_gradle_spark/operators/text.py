@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_spark_gradle_spark.operators.base import TransformationError, _BaseTransformer
+
 # Tiny per-language stopword lists for the n-gram/stopword-overlap
 # language heuristic. Deliberately short: the point is a cheap,
 # JVM-expressible prior, not a real langid model (which would be an
@@ -617,7 +619,7 @@ def score_with_model(
     return src.select(id_col, text_col).mapInPandas(batches, schema)
 
 
-class ModelScoreTransformer:
+class ModelScoreTransformer(_BaseTransformer):
     """Registry adapter (``type: model_score``). Options: ``idColumn``
     (required), ``textColumn`` (default ``text``), ``action``
     ``annotate`` (default — join ``model_score``/``score_status`` back
@@ -643,14 +645,7 @@ class ModelScoreTransformer:
             errors.append(f"unsupported action: {opts['action']}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        from etl_spark_gradle_spark.operators.relational import TransformationError
-
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "model_score config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         scorer = None
         factory = opts.get("scorerFactory")
@@ -670,10 +665,6 @@ class ModelScoreTransformer:
         return df.join(
             scores.withColumnRenamed("id", ic), ic, "left"
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"model_score({opts})"
 
 
 def with_url_features(
@@ -720,7 +711,7 @@ def with_fingerprint(
     return df.withColumn(out_col, fingerprint(text_col))
 
 
-class TextAnalysisTransformer:
+class TextAnalysisTransformer(_BaseTransformer):
     """Registry adapter (``type: text_analysis``). Options:
     ``textColumn`` (default ``text``), ``stats`` / ``languageId`` /
     ``fingerprint`` / ``repetition`` / ``readability`` booleans
@@ -743,14 +734,7 @@ class TextAnalysisTransformer:
             return ValidationResult.fail(f"textColumn not in input schema: {tc}")
         return ValidationResult.ok()
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            from etl_spark_gradle_spark.operators.relational import TransformationError
-
-            raise TransformationError(
-                "text_analysis config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         tc = opts.get("textColumn", "text")
 
@@ -798,19 +782,11 @@ class TextAnalysisTransformer:
         if "topNgram" in opts:
             id_col = opts.get("idColumn", "")
             if id_col not in df.columns:
-                from etl_spark_gradle_spark.operators.relational import (
-                    TransformationError,
-                )
-
                 raise TransformationError(
                     f"topNgram requires idColumn in input schema: {id_col!r}"
                 )
             out = top_ngram_coverage(out, id_col, tc, n=int(opts["topNgram"]))
         return out
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"text_analysis({opts})"
 
 
 # Gopher quality-filter rules (Rae et al. 2021, Table A1) — the 8-word

@@ -49,6 +49,7 @@ from etl_spark_gradle_spark.options import parse_bool
 from etl_spark_gradle_spark.plans.config import AggregateExpr
 from etl_spark_gradle_spark.operators.relational import (
     TransformationError,
+    _BaseTransformer,
     _agg_column,
     _split_csv,
     broadcast_group_join,
@@ -389,7 +390,7 @@ def merge_intervals(
     )
 
 
-class IntervalsTransformer:
+class IntervalsTransformer(_BaseTransformer):
     """Registry adapter (``type: intervals``). Options:
     ``startColumn``, ``endColumn`` (required), ``groupBy`` (csv,
     optional), ``minGap`` (int ≥ 0, default 0 — column units, or
@@ -415,12 +416,7 @@ class IntervalsTransformer:
                 errors.append(f"group column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "intervals config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return merge_intervals(
             df,
@@ -430,12 +426,8 @@ class IntervalsTransformer:
             min_gap=int(opts.get("minGap", 0)),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"intervals({opts})"
 
-
-class ResampleTransformer:
+class ResampleTransformer(_BaseTransformer):
     """Registry adapter (``type: resample``). Options: ``timeColumn``,
     ``stepSeconds``, ``groupBy`` (csv, optional), ``fill``
     null|zero|ffill|linear (default null), ``origin`` (epoch seconds,
@@ -466,12 +458,7 @@ class ResampleTransformer:
                 errors.append(f"group column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "resample config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return resample(
             df,
@@ -483,12 +470,8 @@ class ResampleTransformer:
             origin=int(opts.get("origin", 0)),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"resample({opts})"
 
-
-class RollingMedianTransformer:
+class RollingMedianTransformer(_BaseTransformer):
     """Registry adapter (``type: rolling_median``). Options:
     ``timeColumn``, ``valueColumn``, ``windowRows`` (required),
     ``partitionBy`` (csv), ``tiebreak`` (csv), ``prob`` (float —
@@ -524,12 +507,7 @@ class RollingMedianTransformer:
                 errors.append(f"column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "rolling_median config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return rolling_median(
             df,
@@ -541,10 +519,6 @@ class RollingMedianTransformer:
             tiebreak=_split_csv(opts.get("tiebreak")) or None,
             prob=float(opts["prob"]) if opts.get("prob") is not None else None,
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"rolling_median({opts})"
 
 
 def cusum_changepoints(
@@ -771,7 +745,7 @@ def acf(
     ).select(*group_by, "_s.lag", "_s.n_pairs", "_s.acf_val")
 
 
-class AcfTransformer:
+class AcfTransformer(_BaseTransformer):
     """Registry adapter (``type: acf``). Options: ``orderColumn``,
     ``valueColumn``, ``lags`` (csv of ints, required); ``groupBy``
     (csv), ``resolution`` (default 6)."""
@@ -804,12 +778,7 @@ class AcfTransformer:
                 errors.append(f"column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "acf config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         from etl_spark_gradle_spark.operators.relational import _split_csv
 
         opts = config.options
@@ -822,12 +791,8 @@ class AcfTransformer:
             resolution=int(opts.get("resolution", 6)),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"acf({opts})"
 
-
-class CusumTransformer:
+class CusumTransformer(_BaseTransformer):
     """Registry adapter (``type: changepoint``). Options:
     ``valueColumn``, ``timeColumn``, ``threshold`` (required),
     ``seriesBy`` csv, ``target`` (default: exact per-series mean),
@@ -862,12 +827,7 @@ class CusumTransformer:
                 errors.append(f"column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        res = self.validate(df, config)
-        if not res.is_valid:
-            raise TransformationError(
-                "CusumTransformer config invalid: " + "; ".join(res.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         tgt = opts.get("target")
         return cusum_changepoints(
@@ -881,10 +841,6 @@ class CusumTransformer:
             tiebreak_cols=_split_csv(opts.get("tiebreakColumns")) or None,
             resolution=int(opts.get("resolution", 6)),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"changepoint({opts})"
 
 
 def time_rollup(
@@ -1025,7 +981,7 @@ def time_rollup(
     return out
 
 
-class TimeRollupTransformer:
+class TimeRollupTransformer(_BaseTransformer):
     """Registry adapter (``type: time_rollup``). Options:
     ``timeColumn``, ``valueColumns`` (csv), ``levels`` (csv of
     ascending seconds, each dividing the next), ``groupBy`` (csv,
@@ -1063,12 +1019,7 @@ class TimeRollupTransformer:
                 errors.append(f"group column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "time_rollup config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df, config, ctx):
         opts = config.options
         return time_rollup(
             df,
@@ -1078,10 +1029,6 @@ class TimeRollupTransformer:
             group_by=_split_csv(opts.get("groupBy")) or None,
             origin=int(opts.get("origin", 0)),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"time_rollup({opts})"
 
 
 def ohlc_bars(
@@ -1230,7 +1177,7 @@ def twap(
     )
 
 
-class OhlcTransformer:
+class OhlcTransformer(_BaseTransformer):
     """Registry adapter (``type: ohlc``). Options: ``timeColumn``,
     ``valueColumn``, ``tiebreakColumn`` (required), ``bucketSeconds``
     (required), ``groupBy`` csv, ``origin``."""
@@ -1261,12 +1208,7 @@ class OhlcTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "ohlc config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return ohlc_bars(
             df,
@@ -1278,12 +1220,8 @@ class OhlcTransformer:
             origin=int(opts.get("origin", 0)),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"ohlc({opts})"
 
-
-class TwapTransformer:
+class TwapTransformer(_BaseTransformer):
     """Registry adapter (``type: twap``). Options: ``timeColumn``,
     ``valueColumn`` (required), ``groupBy`` csv, ``tiebreakColumn``."""
 
@@ -1309,12 +1247,7 @@ class TwapTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "twap config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return twap(
             df,
@@ -1323,10 +1256,6 @@ class TwapTransformer:
             group_by=_split_csv(opts.get("groupBy")) or None,
             tiebreak_col=opts.get("tiebreakColumn"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"twap({opts})"
 
 
 def lag_features(
@@ -1406,7 +1335,7 @@ def lag_features(
     return out
 
 
-class LagFeaturesTransformer:
+class LagFeaturesTransformer(_BaseTransformer):
     """Registry adapter (``type: lag_features``). Options:
     ``seriesBy`` csv (required), ``timeColumn``, ``valueColumn``
     (required), ``lags`` csv of ints (default "1"), ``tiebreak`` csv,
@@ -1443,12 +1372,7 @@ class LagFeaturesTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "lag_features config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return lag_features(
             df,
@@ -1460,10 +1384,6 @@ class LagFeaturesTransformer:
             deltas=parse_bool(opts.get("deltas")),
             prefix=opts.get("prefix"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"lag_features({opts})"
 
 
 def rolling_zscore(
@@ -1543,7 +1463,7 @@ def rolling_zscore(
     return tmp.withColumn(out, z).drop("__rz_s", "__rz_ss", "__rz_n")
 
 
-class RollingZscoreTransformer:
+class RollingZscoreTransformer(_BaseTransformer):
     """Registry adapter (``type: rolling_zscore``). Options:
     ``partitionBy`` csv, ``timeColumn``, ``valueColumn``,
     ``windowRows`` (required), ``tiebreak`` csv, ``outputColumn``,
@@ -1575,12 +1495,7 @@ class RollingZscoreTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "rolling_zscore config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         return rolling_zscore(
             df,
@@ -1593,10 +1508,6 @@ class RollingZscoreTransformer:
             min_obs=int(opts.get("minObs", 2)),
             include_current=parse_bool(opts.get("includeCurrent")),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"rolling_zscore({opts})"
 
 
 def ewma(
@@ -1980,7 +1891,7 @@ def nelson_aalen(
     ).orderBy(*group_by, "t")
 
 
-class EwmaTransformer:
+class EwmaTransformer(_BaseTransformer):
     """Registry adapter (``type: ewma``). Options: ``keyColumns`` csv
     (required; or ``keyColumn``), ``timeColumn``, ``valueColumn``
     (required), ``alpha`` (required, in (0, 1]), ``outputColumn``
@@ -2018,12 +1929,7 @@ class EwmaTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "ewma config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         keys = _split_csv(opts.get("keyColumns") or opts.get("keyColumn"))
         if df.isStreaming:
@@ -2046,14 +1952,8 @@ class EwmaTransformer:
             output_col=opts.get("outputColumn", "ewma"),
         )
 
-    def lineage_step(self, config) -> str:
-        opts = ",".join(
-            f"{k}={v}" for k, v in sorted(config.options.items())
-        )
-        return f"ewma({opts})"
 
-
-class KaplanMeierTransformer:
+class KaplanMeierTransformer(_BaseTransformer):
     """Registry adapter (``type: kaplan_meier``). Options:
     ``durationColumn`` (required), ``eventColumn`` (required except
     aalen_johansen), ``groupBy`` csv, ``estimator`` kaplan_meier
@@ -2099,12 +1999,7 @@ class KaplanMeierTransformer:
             else ValidationResult.fail(*errors)
         )
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationError(
-                "kaplan_meier config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         opts = config.options
         est = opts.get("estimator", "kaplan_meier")
         if est == "aalen_johansen":
@@ -2120,12 +2015,6 @@ class KaplanMeierTransformer:
             event_col=opts["eventColumn"],
             group_by=_split_csv(opts.get("groupBy")) or None,
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(
-            f"{k}={v}" for k, v in sorted(config.options.items())
-        )
-        return f"kaplan_meier({opts})"
 
 
 def logrank_test(

@@ -369,7 +369,7 @@ class PipelineExecutor:
             if config.streaming and not getattr(transformer, "streamable", False):
                 raise ConfigError(
                     f"transformation '{t_config.type}' is not streamable — supported in "
-                    "streaming mode: filter, map, windowing, dedup, ewma"
+                    f"streaming mode: {', '.join(_streamable_types())}"
                 )
             df = transformer.transform(df, t_config, ctx)
             steps.append(transformer.lineage_step(t_config))
@@ -399,6 +399,14 @@ class PipelineExecutor:
         final = lineage_mod.stamp_lineage(plan.transformed, meta, config.pipeline_id, ctx.run_id)
         loaded = loader.load(final, sink, ctx.run_id).records_written
         return _observed_count(plan.extract_obs), loaded
+
+
+def _streamable_types() -> list[str]:
+    """The registered transformer types whose adapter sets ``streamable``
+    (imports every operator module; called only to word a rejection)."""
+    from etl_spark_gradle_spark.operators import TRANSFORMER_REGISTRY
+
+    return [k for k, t in TRANSFORMER_REGISTRY.items() if getattr(t, "streamable", False)]
 
 
 def _registered(registry, kind: str, field: str, key: str):

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
+from etl_spark_gradle_spark.operators.base import TransformationError, _BaseTransformer
 from etl_spark_gradle_spark.plans.config import QualityConfig, ValidationResult
 
 
@@ -193,7 +194,7 @@ def profile_columns(
     return row.select(F.inline(F.array(*structs)))
 
 
-class ProfileTransformer:
+class ProfileTransformer(_BaseTransformer):
     """Registry adapter (``type: profile``). Options: ``columns`` (csv,
     default all), ``distinct`` exact|approx (default exact)."""
 
@@ -209,24 +210,15 @@ class ProfileTransformer:
                 errors.append(f"profile column not in input schema: {c}")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df, config, ctx):
+    def _apply(self, df, config, ctx):
         from etl_spark_gradle_spark.operators.relational import _split_csv
 
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationErrorProxy(
-                "profile config invalid: " + "; ".join(result.errors)
-            )
         opts = config.options
         return profile_columns(
             df,
             columns=_split_csv(opts.get("columns")) or None,
             distinct=opts.get("distinct", "exact"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"profile({opts})"
 
 
 def _types_compatible(actual: DataType, expected: DataType) -> bool:
@@ -451,7 +443,7 @@ def side_actions(spark, actions: dict[str, Callable[[], object]]) -> Iterator[Qu
             report.violations_by_check = {k: int(v or 0) for k, v in checks.items()}
 
 
-class SchemaAlignTransformer:
+class SchemaAlignTransformer(_BaseTransformer):
     """Registry adapter (``type: schema_align``). Options:
     ``targetSchema`` (DDL string, e.g. ``"id long, name string"``),
     ``mode`` safe|strict."""
@@ -479,23 +471,12 @@ class SchemaAlignTransformer:
             raise ValueError(f"targetSchema must describe columns, got {parsed}")
         return parsed
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            from etl_spark_gradle_spark.operators.relational import TransformationError
-
-            raise TransformationError(
-                "SchemaAlignTransformer config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         return schema_align(
             df,
             self._parse(config.options["targetSchema"]),
             mode=config.options.get("mode", "safe"),
         )
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"schema_align({opts})"
 
 
 # ---------------------------------------------------------------------------
@@ -529,13 +510,7 @@ def _check_violation_expr(check: dict):
         return (c.isNotNull() & ~c.rlike(check["pattern"])).cast("long")
     if ctype == "custom":
         return (~F.coalesce(F.expr(check["expr"]), F.lit(False))).cast("long")
-    raise TransformationErrorProxy(f"unsupported expectation type: {ctype}")
-
-
-class TransformationErrorProxy(ValueError):
-    """Local error type so quality.py keeps no import on relational.py
-    (which imports nothing from here — avoids a cycle); the executor
-    treats any exception from a transformer as a typed failure."""
+    raise TransformationError(f"unsupported expectation type: {ctype}")
 
 
 def _normalize_checks(checks: list[dict]) -> list[dict]:
@@ -544,21 +519,21 @@ def _normalize_checks(checks: list[dict]) -> list[dict]:
         c = dict(c)
         ctype = c.get("type")
         if ctype not in _EXPECTATION_TYPES:
-            raise TransformationErrorProxy(
+            raise TransformationError(
                 f"expectation type must be one of {_EXPECTATION_TYPES}, got '{ctype}'"
             )
         if ctype in ("not_null", "unique", "range", "in_set", "pattern", "ref") and not c.get("column"):
-            raise TransformationErrorProxy(f"expectation #{i} ({ctype}) requires 'column'")
+            raise TransformationError(f"expectation #{i} ({ctype}) requires 'column'")
         if ctype == "custom" and not c.get("expr"):
-            raise TransformationErrorProxy("custom expectation requires 'expr'")
+            raise TransformationError("custom expectation requires 'expr'")
         if ctype == "in_set" and not c.get("values"):
-            raise TransformationErrorProxy("in_set expectation requires 'values'")
+            raise TransformationError("in_set expectation requires 'values'")
         if ctype == "pattern" and not c.get("pattern"):
-            raise TransformationErrorProxy("pattern expectation requires 'pattern'")
+            raise TransformationError("pattern expectation requires 'pattern'")
         if ctype == "range" and c.get("lo") is None and c.get("hi") is None:
-            raise TransformationErrorProxy("range expectation requires 'lo' and/or 'hi'")
+            raise TransformationError("range expectation requires 'lo' and/or 'hi'")
         if ctype == "ref" and c.get("ref_df") is None:
-            raise TransformationErrorProxy("ref expectation requires 'ref_df'")
+            raise TransformationError("ref expectation requires 'ref_df'")
         c.setdefault(
             "name",
             f"{ctype}:{c.get('column') or c.get('expr')}",
@@ -650,7 +625,7 @@ def enforce_expectations(df: DataFrame, checks: list[dict]) -> DataFrame:
         if not r.passed
     ]
     if failing:
-        raise TransformationErrorProxy(
+        raise TransformationError(
             "expectations failed: "
             + "; ".join(f"{n} ({v} violations)" for n, v in failing)
         )
@@ -698,10 +673,10 @@ def _parse_check_spec(spec: str) -> dict:
             "ref_table": parts[2].strip(),
             "ref_column": parts[3].strip(),
         }
-    raise TransformationErrorProxy(f"unparseable expectation spec: '{spec}'")
+    raise TransformationError(f"unparseable expectation spec: '{spec}'")
 
 
-class ExpectTransformer:
+class ExpectTransformer(_BaseTransformer):
     """Registry adapter (``type: expect``). Options: ``checks``
     (``;``-separated compact specs — see :func:`_parse_check_spec`),
     ``action`` ``report`` (output = the report table) | ``gate``
@@ -722,18 +697,13 @@ class ExpectTransformer:
                     col = c.get("column")
                     if col and col not in df.columns:
                         errors.append(f"check column not in input schema: {col}")
-            except TransformationErrorProxy as exc:
+            except TransformationError as exc:
                 errors.append(str(exc))
         if config.options.get("action", "report") not in ("report", "gate"):
             errors.append("expect action must be 'report' or 'gate'")
         return ValidationResult.ok() if not errors else ValidationResult.fail(*errors)
 
-    def transform(self, df: DataFrame, config, ctx) -> DataFrame:
-        result = self.validate(df, config)
-        if not result.is_valid:
-            raise TransformationErrorProxy(
-                "expect config invalid: " + "; ".join(result.errors)
-            )
+    def _apply(self, df: DataFrame, config, ctx) -> DataFrame:
         checks = [
             _parse_check_spec(s)
             for s in config.options["checks"].split(";")
@@ -744,14 +714,10 @@ class ExpectTransformer:
                 try:
                     c["ref_df"] = ctx.spark.table(c.pop("ref_table"))
                 except Exception as exc:
-                    raise TransformationErrorProxy(
+                    raise TransformationError(
                         f"expect: ref view not found for check on "
                         f"'{c['column']}': {exc}"
                     ) from exc
         if config.options.get("action", "report") == "gate":
             return enforce_expectations(df, checks)
         return expectations_report(df, checks)
-
-    def lineage_step(self, config) -> str:
-        opts = ",".join(f"{k}={v}" for k, v in sorted(config.options.items()))
-        return f"expect({opts})"

@@ -388,7 +388,7 @@ def test_expectations_report_counts(spark):
 
 def test_expectations_ref_and_gate(spark):
     from etl_spark_gradle_spark.quality import (
-        TransformationErrorProxy,
+        TransformationError,
         enforce_expectations,
         expectations_report,
     )
@@ -406,7 +406,7 @@ def test_expectations_ref_and_gate(spark):
         clean, [{"type": "not_null", "column": "fk"}]
     )
     assert out.count() == 2
-    with pytest.raises(TransformationErrorProxy, match="expectations failed"):
+    with pytest.raises(TransformationError, match="expectations failed"):
         enforce_expectations(
             facts,
             [{"type": "ref", "column": "fk", "ref_df": dim, "ref_column": "pk"}],
@@ -464,9 +464,9 @@ def test_expect_yaml_adapter(spark):
         type="expect",
         options={"checks": "range:id:5:", "action": "gate"},
     )
-    from etl_spark_gradle_spark.quality import TransformationErrorProxy
+    from etl_spark_gradle_spark.quality import TransformationError
 
-    with pytest.raises(TransformationErrorProxy):
+    with pytest.raises(TransformationError):
         t.transform(df, gate, ctx)
 
     bad = t.validate(

@@ -131,7 +131,7 @@ def test_streaming_step_not_streamable(spark, tmp_path):
     assert metrics.status == "FAILED"
     assert metrics.error_details == (
         "ConfigError: transformation 'sort' is not streamable — supported in "
-        "streaming mode: filter, map, windowing, dedup, ewma"
+        "streaming mode: dedup, ewma, filter, map, windowing"
     )
 
 
